@@ -7,17 +7,18 @@ Run from the repository root. The program under test is the
 ``movie_recommendation_etl_spark`` package in that root; the benchmark
 imports it from source and never modifies it. Everything the run writes
 goes under ``.perfbench_work/`` in the root: seeded inputs (cached per
-seed), a fresh ``SPARK_LOCAL_DIRS``, outputs, and the span dump of a
-traced run.
+seed), serve's index (cached per program version), a fresh
+``SPARK_LOCAL_DIRS``, outputs, and the span dump of a traced run.
 
-A run: prepare inputs (excluded from metrics) -> set up three times
-(fresh SparkContext + workload load; median reported as ``setup_s``) ->
-warm up -> measure ops for ``--seconds`` (at least one op) -> check every
-op's outputs -> print one JSON line. ``--trace 0`` reports the end-to-end
-metrics; ``--trace 1`` reports the per-layer metrics from traced ops and
-the tracing overhead against untraced ops (serve: the first half of the
-window untraced, the second traced; build: an untraced job recorded by an
-earlier run of the same seed, or else one run first in its own JVM).
+A run: prepare inputs (excluded from metrics; serve's index, when there
+is none for this program version, is built first in a JVM of its own) ->
+set up three times (fresh SparkContext + workload load; median reported
+as ``setup_s``) -> warm up -> measure ops for ``--seconds`` (at least one
+op) -> check every op's outputs -> print one JSON line. ``--trace 0``
+reports the end-to-end metrics; ``--trace 1`` reports the per-layer
+metrics from traced ops and the tracing overhead against untraced ops
+(serve: traced and untraced requests alternate; build: an untraced job
+first, then the traced job, each the first pass in a fresh JVM).
 Metric definitions: perfbench/README.md.
 """
 
@@ -28,6 +29,7 @@ import json
 import os
 import shutil
 import statistics
+import subprocess
 import sys
 import threading
 import time
@@ -36,7 +38,10 @@ from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
 ROOT = Path.cwd().resolve()
-PACKAGE = "movie_recommendation_etl_spark"
+sys.path.insert(0, str(HERE))
+
+from workloads import PACKAGE, dir_bytes  # noqa: E402
+
 # Spark task slots. The host has 4 cores; the 4th is left to the JVM's JIT
 # and GC threads and the driver's Python, which on a fresh JVM otherwise
 # compete with the tasks (measured: same median pass time at 3 slots,
@@ -58,6 +63,8 @@ def parse_args(argv=None):
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    # internal: build serve's index in this process's own JVM and exit
+    ap.add_argument("--build-index", action="store_true", help=argparse.SUPPRESS)
     return ap.parse_args(argv)
 
 
@@ -88,15 +95,17 @@ def _tree_rss_kb(root_pid: int) -> int:
     return total
 
 
-def _dir_bytes(path: Path) -> int:
-    total = 0
-    for dirpath, _, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.lstat(os.path.join(dirpath, f)).st_size
-            except OSError:
-                pass
-    return total
+def _cpu_times() -> list[int]:
+    """The host-wide ``cpu`` line of /proc/stat, in clock ticks."""
+    with open("/proc/stat") as fh:
+        return [int(x) for x in fh.readline().split()[1:]]
+
+
+def steal_share(before: list[int], after: list[int]) -> float:
+    """Share of CPU time the hypervisor gave to other guests between two
+    ``_cpu_times`` readings (steal is the 8th field)."""
+    d = [b - a for a, b in zip(before, after)]
+    return d[7] / max(1, sum(d[:8]))
 
 
 class Sampler(threading.Thread):
@@ -113,7 +122,7 @@ class Sampler(threading.Thread):
         pid = os.getpid()
         while not self._stop_evt.is_set():
             self.rss_kb.append(_tree_rss_kb(pid))
-            self.peak_disk = max(self.peak_disk, _dir_bytes(self.local_dir))
+            self.peak_disk = max(self.peak_disk, dir_bytes(self.local_dir))
             self._stop_evt.wait(self.period)
 
     def stop(self):
@@ -181,8 +190,9 @@ def shutdown_jvm() -> None:
 
 
 class Ctx:
-    def __init__(self, work: Path, run_dir: Path, seed: int, tracer):
-        self.work, self.run_dir, self.seed, self.tracer = work, run_dir, seed, tracer
+    def __init__(self, root: Path, run_dir: Path, seed: int, tracer):
+        self.root, self.work = root, root / ".perfbench_work"
+        self.run_dir, self.seed, self.tracer = run_dir, seed, tracer
 
 
 def pct(xs, q):
@@ -199,7 +209,6 @@ def main(argv=None) -> int:
               file=sys.stderr)
         return 2
     sys.path.insert(0, str(ROOT))
-    sys.path.insert(0, str(HERE))
     import workloads
     from spans import Tracer
 
@@ -224,17 +233,33 @@ def main(argv=None) -> int:
     )
     os.environ.pop("SPARK_MASTER", None)
 
-    sampler = Sampler(local)
-    sampler.start()
     tracer = Tracer(False)
-    ctx = Ctx(work, run_dir, args.seed, tracer)
+    ctx = Ctx(ROOT, run_dir, args.seed, tracer)
     wl = workloads.WORKLOADS[args.workload](ctx)
+    if args.build_index:
+        try:
+            build_index(wl, run_dir)
+        finally:
+            shutil.rmtree(run_dir, ignore_errors=True)
+        return 0
     try:
+        if hasattr(wl, "index_ready") and not wl.index_ready():
+            log("building the serve index in its own JVM")
+            subprocess.run(
+                [sys.executable, str(Path(__file__).resolve()), "--workload", args.workload,
+                 "--seed", str(args.seed), "--seconds", "0", "--build-index"],
+                check=True, stdout=sys.stderr, timeout=600,
+            )
+        sampler = Sampler(local)
+        sampler.start()
+        cpu0 = _cpu_times()
         try:
             result = run(args, ctx, wl)
         finally:
             shutdown_jvm()
             sampler.stop()
+        # a noisy host is the main source of run-to-run spread: log it
+        log(f"hypervisor steal {steal_share(cpu0, _cpu_times()):.1%} of CPU time")
         if args.trace:
             tracer.add_event_log(run_dir / "events")
             tracer.dump(work / f"trace-{args.workload}-{args.seed}.json")
@@ -245,13 +270,24 @@ def main(argv=None) -> int:
             # spread no bound can hold; the peak is a per-layer metric
             result["metrics"]["rss_mb"] = {
                 "value": statistics.median(sampler.rss_kb) / 1024, "unit": "MB"}
-            op_s = result.pop("_layer")["untraced_op_s"]
-            (work / f"untraced-{args.workload}-{args.seed}.json").write_text(
-                json.dumps({"op_s": op_s}))
+            del result["_layer"]
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
     print(json.dumps(result))
     return 0
+
+
+def build_index(wl, run_dir: Path) -> None:
+    from movie_recommendation_etl_spark.session import get_spark
+
+    t0 = time.perf_counter()
+    spark = get_spark(extra_conf=spark_conf(run_dir, False))
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        wl.build_index(spark)
+    finally:
+        shutdown_jvm()
+    log(f"serve index built in {time.perf_counter() - t0:.1f}s")
 
 
 def log(msg: str) -> None:
@@ -264,12 +300,10 @@ def run(args, ctx, wl) -> dict:
 
     tracer = ctx.tracer
     traced_conf = spark_conf(ctx.run_dir, bool(args.trace))
-    # A build trace run compares its traced job with an untraced first job
-    # on the same seed: the one an earlier untraced run in this checkout
-    # recorded, or else one it runs first, in its own fresh JVM without
-    # the event log (that doubles the run's length).
-    baseline = ctx.work / f"untraced-{args.workload}-{args.seed}.json"
-    twin = bool(args.trace) and wl.batch and not baseline.exists()
+    # A traced build run compares its traced job with an untraced job it
+    # runs first, in its own fresh JVM without the event log: both are
+    # first passes (that doubles the run's length).
+    twin = bool(args.trace) and wl.batch
     conf = spark_conf(ctx.run_dir, False) if twin else traced_conf
     t0 = time.perf_counter()
     spark = get_spark(extra_conf=conf)
@@ -321,36 +355,39 @@ def run(args, ctx, wl) -> dict:
     log(f"warm-up {time.perf_counter() - t0:.1f}s, {i} ops")
 
     def loop(seconds, traced):
+        """Ops for ``seconds`` (at least one that succeeds); the k-th op
+        of the loop is traced if ``traced(k)``. Returns the untraced and
+        the traced op times and the wall time."""
         nonlocal i
-        lats = []
+        lats = {False: [], True: []}
         start = time.perf_counter()
-        while not lats or time.perf_counter() - start < seconds:
-            tracer.enabled = traced
+        k = 0
+        while not (lats[False] or lats[True]) or time.perf_counter() - start < seconds:
+            on = traced(k)
+            tracer.enabled = on
             tracer.op = i
             with tracer.span(f"{wl.name}.op"):
                 dt = do_op(i)
             tracer.enabled = False
             i += 1
+            k += 1
             if dt is not None:
-                lats.append(dt)
-            elif not lats and failed > 5:
+                lats[on].append(dt)
+            elif not (lats[False] or lats[True]) and failed > 5:
                 raise RuntimeError("every measured op failed")
-        return lats, time.perf_counter() - start
+        return lats[False], lats[True], time.perf_counter() - start
 
     traced_lats = []
     if twin:
-        lats, wall = loop(args.seconds, False)
+        lats, _, wall = loop(args.seconds, lambda k: False)
         shutdown_jvm()
         fresh_setup(traced_conf, True)
-        traced_lats, _ = loop(args.seconds, True)
-    elif args.trace and wl.batch:
-        traced_lats, wall = loop(args.seconds, True)
-        lats = [json.loads(baseline.read_text())["op_s"]]
+        _, traced_lats, _ = loop(args.seconds, lambda k: True)
     elif args.trace:
-        lats, wall = loop(args.seconds / 2, False)
-        traced_lats, _ = loop(args.seconds / 2, True)
+        # alternate, so traced and untraced requests see the same JIT state
+        lats, traced_lats, wall = loop(args.seconds, lambda k: k % 2 == 1)
     else:
-        lats, wall = loop(args.seconds, False)
+        lats, _, wall = loop(args.seconds, lambda k: False)
     log(f"measured {len(lats)} ops: {[round(x, 3) for x in lats]} "
         f"traced {[round(x, 3) for x in traced_lats]}")
 
@@ -378,8 +415,8 @@ def run(args, ctx, wl) -> dict:
     m = {
         "setup_s": (statistics.median(setup_s), "s"),
         "latency_p50_ms": (1000 * pct(lats, 50), "ms"),
-        # the highest percentile with about ten of a serve run's ~40
-        # requests beyond it (p90 would rest on ~4 and spread 0.29)
+        # the highest percentile with several of a serve run's ~30
+        # requests beyond it (p90 would rest on ~3)
         "latency_p75_ms": (1000 * pct(lats, 75), "ms"),
         "ops_per_s": (ops / wall, "1/s"),
         "docs_per_s": (ops * docs_per_op / wall, "docs/s"),
