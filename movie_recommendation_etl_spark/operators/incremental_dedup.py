@@ -346,7 +346,7 @@ def _admit_batch(
     with reliable_checkpoint_scope(spark, checkpoint_dir) as _ckpt:
         bands = _ckpt(bands)
         # NO right_size_materialized here (added r17, REVERTED r18 by A/B
-        # adjudication — scripts/ab_r17_sweep.py): unlike the q53 band hub
+        # adjudication): unlike the q53 band hub
         # (64 near-empty partitions feeding many stages), the admission
         # batch's band frame is consumed by only three short joins, and
         # the helper's extra count job + plan-to-RDD conversion per

@@ -856,8 +856,7 @@ def _verify_pairs(
     doc per join side (2 x docs rows, in the pre-join projection), after
     which the 6-8M-pair intersect compares longs instead of ~20-char
     strings and the join shuffles ~450 B/doc instead of ~1.2 KB. Measured
-    at the 605k-doc reference replay (r18,
-    scripts/profile_neardup_refscale.py): 43.3 s -> 7.4 s for the verify
+    at the 605k-doc reference replay (r18): 43.3 s -> 7.4 s for the verify
     stage, identical verified-pair set. The Jaccard VALUE equals
     the raw-string Jaccard unless two distinct shingles collide in 60
     bits (P ~ 2^-60 per pair); the DuckDB oracles replay the same md5

@@ -20,8 +20,7 @@ Cross-engine determinism (the q79 oracle gate):
 - every log-probability is produced by the ENGINE's ``F.log2`` — including
   the OOV constant, which is computed inside the fit aggregation rather
   than by Python's ``math.log2`` (CPython's libm log2 differs from the JVM
-  result in the last ulp on part of this domain; measured,
-  scripts/measure_log_bitmatch.py);
+  result in the last ulp on part of this domain; measured);
 - the per-document mean accumulates the log2 values through
   DECIMAL(38,18) (functions/numeric.py policy), so the cross-entropy is
   independent of partitioning/shuffle order — the same number on 32 local

@@ -259,8 +259,9 @@ def q30_window_agg_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-state); the union is plan-level only — no extra exchange.
 
     r11: the registry/oracle slot is unchanged (ONE hash gate over all
-    five arms), but bench.py times the two halves separately
-    (q30_batch_arms / q30_stream_arms): the streaming drains' per-micro-
+    five arms), but the two halves are separate functions
+    (q30_batch_arms / q30_stream_arms) so they can be timed apart: the
+    streaming drains' per-micro-
     batch fixed overhead (12-20 s/sample) drowned the batch window
     suite's sub-second signal inside one number, hiding any batch-plan
     regression in stream-trigger noise (r10 VERDICT #4)."""

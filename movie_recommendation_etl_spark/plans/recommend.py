@@ -44,7 +44,7 @@ TOP_K = 5
 def lsh_knn_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch LSH ANN over embeddings: one approxSimilarityJoin for all 20
     queries (the scale path), window top-5 per query — the neighbor-level
-    frame bench.py times and scores for recall@5. q61 wraps it in the
+    frame that recall@5 is scored on. q61 wraps it in the
     contract gate. Compare with q60_knn_bruteforce — the exact baseline
     it approximates."""
     emb = embeddings_as_vectors(spark, sf_dir)
@@ -62,8 +62,7 @@ def lsh_knn_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_knn_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN neighbor-level frame: KMeans coarse cells + probe-limited
     equi-join search — the alternative scale path to LSH when the corpus
-    clusters. q62 wraps it in the contract gate; bench.py times this frame
-    and records recall_at5.
+    clusters. q62 wraps it in the contract gate (with a recall floor).
 
     n_probe=6 of 8 cells (r11; was 4): the synthetic embeddings table is
     near-uniform in the unit ball, so cells barely separate neighbors and
@@ -382,10 +381,9 @@ def flagship_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per sink (SURVEY §3.1 step 6), a 4x cost we don't copy. The LSH
     hash column is ALSO precomputed via prepare_index: without it,
     approxNearestNeighbors re-transforms the whole corpus on every query
-    (~60 s/query at 604k docs, measured) — this is the warm path bench.py
-    measures and the shape any caller should copy. `entry()` and bench.py
-    consume this neighbor-level frame; the q70 registry slot wraps it in
-    the contract gate (r11)."""
+    (~60 s/query at 604k docs, measured) — this is the warm path and the
+    shape any caller should copy. `entry()` consumes this neighbor-level
+    frame; the q70 registry slot wraps it in the contract gate (r11)."""
     return _flagship_ann(spark, sf_dir)[1]
 
 

@@ -217,9 +217,9 @@ def q40_text_profile_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     short_ratio / mean_tok_len were already arms; type_token_ratio joins as
     an exact division, and log_n_tokens is hashed QUANTIZED to 9 decimals
     (``log_n_tokens_q9``) because JVM and DuckDB libm ln() diverge in the
-    last ulp on ~1% of the integer domain (measured,
-    scripts/measure_log_bitmatch.py — 0 mismatches at 1e-9 granularity on
-    every testdata SF, and the exact input n_ws_tokens is hashed
+    last ulp on ~1% of the integer domain (measured: 0 mismatches at
+    1e-9 granularity on every testdata SF, and the exact input n_ws_tokens
+    is hashed
     alongside). The sigmoid itself is deliberately NOT oracled — libm exp
     is not cross-engine reproducible; MLlib-vs-Catalyst agreement at 1e-12
     lives in tests/test_quality_model.py.

@@ -1120,9 +1120,8 @@ def q78_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q79_KEEP = 0.7
 # Engine-portable log2: DuckDB's log2() disagrees with the JVM's in the
 # last ulp on part of this domain, but ln(x)/ln(2.0) reproduces Spark's
-# F.log2 bit-for-bit (measured over the full model-probability domain —
-# scripts/measure_log_bitmatch.py: 0 mismatches for ln/ln2 vs 5/25 for
-# native log2).
+# F.log2 bit-for-bit (measured over the full model-probability domain:
+# 0 mismatches for ln/ln2 vs 5/25 for native log2).
 _Q79_SQL_LOG2 = "ln({x}) / ln(2.0)"
 
 

@@ -42,6 +42,24 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Driver heap for new sessions: ``$SPARK_GRAFT_DRIVER_MEM`` if set,
+    else half of the host's physical memory, capped at 16g.
+
+    In local mode the driver heap IS the executor heap for every worker
+    thread, so Spark's 1g default starves cache-heavy iterative queries;
+    but a fixed 16g on a 15 GB swap-less host gets the JVM OOM-killed
+    once its heap fills (off-heap, Python workers and the OS need the
+    rest)."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    phys_mb = (
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    )
+    return f"{min(phys_mb // 2, 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "movie_recommendation_etl_spark",
     master: str | None = None,
@@ -57,11 +75,9 @@ def get_spark(
         master = os.environ.get("SPARK_MASTER", f"local[{default_parallelism()}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_BASE_CONF)
-    # In local mode the driver heap IS the executor heap for every worker
-    # thread; Spark's 1g default starves local[32] (OOM on cache-heavy
-    # iterative queries at sf0.1). Only effective at JVM creation — a
-    # getOrCreate() against a live session keeps its existing heap.
-    conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    # Only effective at JVM creation — a getOrCreate() against a live
+    # session keeps its existing heap.
+    conf["spark.driver.memory"] = default_driver_memory()
     # Seed value only — AQE coalesces to actual data volume at runtime.
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions or max(default_parallelism(), 8)

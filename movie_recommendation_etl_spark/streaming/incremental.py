@@ -80,11 +80,9 @@ def stream_admit_documents(
     the exact batch admission (operators/incremental_dedup.
     admit_new_documents: within-batch greedy-by-id rejection + store
     probe + signature merge) and lands its admitted rows in the files
-    sink. Completes the streaming x incremental matrix: the stateless
-    fingerprint gate (streaming/dedup.py) catches only reformatted
-    exact reposts within the watermark; this tier rejects NEAR-duplicates
-    against everything ever admitted, with O(batch) work per batch and no
-    driver-held state (the store is a partitioned parquet table).
+    sink. This tier rejects NEAR-duplicates against everything ever
+    admitted, with O(batch) work per batch and no driver-held state (the
+    store is a partitioned parquet table).
 
     Effectively exactly-once under foreachBatch's at-least-once replay,
     by composition of two idempotent pieces: admit_new_documents

@@ -1,67 +1,9 @@
-"""Tests for the pandas extensibility surface (X2) and approx-distinct
-accuracy (q44)."""
+"""Approx-distinct accuracy (q44)."""
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import functions as F
-
-from movie_recommendation_etl_spark.operators.extensibility import (
-    grouped_zscore,
-    text_burstiness,
-)
 from movie_recommendation_etl_spark.plans.registry import QUERIES
-from movie_recommendation_etl_spark.sources.catalog import load_table
 import movie_recommendation_etl_spark.plans.all  # noqa: F401
-
-
-def test_pandas_udf_burstiness(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    rows = text_burstiness(docs).select("doc_id", "text", "burstiness").collect()
-    for r in rows:
-        toks = r["text"].split(" ")
-        expected = 1.0 - len(set(toks)) / len(toks)
-        assert math.isclose(r["burstiness"], expected, rel_tol=1e-12)
-
-
-def test_grouped_zscore_matches_sql(spark, sf_dir):
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", "value"
-    )
-    got = {
-        r["event_id"]: r["zscore"]
-        for r in grouped_zscore(events, ["event_type"], "value").collect()
-    }
-    stats = events.groupBy("event_type").agg(
-        F.avg("value").alias("mu"), F.stddev_pop("value").alias("sigma")
-    )
-    exp_rows = events.join(stats, "event_type").select(
-        "event_id", ((F.col("value") - F.col("mu")) / F.col("sigma")).alias("z")
-    ).collect()
-    for r in exp_rows:
-        assert math.isclose(got[r["event_id"]], r["z"], rel_tol=1e-9, abs_tol=1e-9)
-
-
-def test_grouped_agg_pandas_udaf(spark, sf_dir):
-    from movie_recommendation_etl_spark.operators.extensibility import (
-        grouped_geometric_mean,
-    )
-
-    events = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
-    got = {
-        r["event_type"]: r["geo_mean"]
-        for r in grouped_geometric_mean(events, ["event_type"], "value").collect()
-    }
-    exp = {
-        r["event_type"]: math.exp(r["m"])
-        for r in events.groupBy("event_type")
-        .agg(F.avg(F.log("value")).alias("m"))
-        .collect()
-    }
-    assert set(got) == set(exp)
-    for k in got:
-        assert math.isclose(got[k], exp[k], rel_tol=1e-9)
 
 
 def test_approx_count_distinct_accuracy(spark, sf_dir):
@@ -82,40 +24,3 @@ def test_approx_count_distinct_accuracy(spark, sf_dir):
         F.count_distinct("l_orderkey").alias("e"),
     ).collect()[0]
     assert abs(raw["a"] - raw["e"]) <= 0.05 * raw["e"]
-
-
-def test_udtf_sentence_table_matches_builtin(spark, sf_dir):
-    """The UDTF fan-out must agree with the pure-Catalyst formulation
-    (posexplode over split) on sentence counts and token counts."""
-    from movie_recommendation_etl_spark.operators.extensibility import (
-        sentence_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").limit(30)
-    got = sentence_table(docs, "text", ("doc_id",))
-    rows = {
-        (r["doc_id"], r["sentence_idx"]): (r["sentence"], r["n_tokens"])
-        for r in got.collect()
-    }
-
-    expected = (
-        docs.select(
-            "doc_id",
-            F.posexplode(
-                F.filter(
-                    F.transform(
-                        F.split("text", r"[.!?]+"), lambda s: F.trim(s)
-                    ),
-                    lambda s: s != "",
-                )
-            ).alias("sentence_idx", "sentence"),
-        )
-        .withColumn("n_tokens", F.size(F.split("sentence", r"\s+")))
-        .collect()
-    )
-    assert rows
-    assert len(rows) == len(expected)
-    for r in expected:
-        sent, n = rows[(r["doc_id"], r["sentence_idx"])]
-        assert sent == r["sentence"]
-        assert n == r["n_tokens"]

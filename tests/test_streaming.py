@@ -77,58 +77,6 @@ def test_streaming_sessions_match_batch(spark, sf_dir, tmp_path):
     assert got == exp
 
 
-def test_streaming_dedup_matches_batch_distinct(spark, sf_dir, tmp_path):
-    """A doubled source (every event delivered twice) streamed through
-    dropDuplicatesWithinWatermark must yield exactly one row per event_id —
-    the batch-distinct answer."""
-    from movie_recommendation_etl_spark.streaming.dedup import deduped_events
-
-    batch = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_doubled_src")
-    batch.unionAll(batch).write.mode("overwrite").parquet(path)
-
-    stream = read_events_stream(spark, path)
-    run_available_now(
-        deduped_events(stream), "deduped_events", output_mode="append"
-    )
-    got = spark.table("deduped_events")
-    n_ids = batch.select("event_id").distinct().count()
-    assert got.count() == n_ids
-    assert got.select("event_id").distinct().count() == n_ids
-
-
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
-    """Stream-stream interval join (clicks x errors within 30 min, keyed on
-    user) drained with availableNow must equal the identical batch join."""
-    from movie_recommendation_etl_spark.streaming.joins import (
-        click_error_attribution,
-    )
-
-    src = _stage_events(spark, sf_dir, tmp_path)
-    stream = read_events_stream(spark, src, max_files_per_trigger=4)
-    clicks_s = stream.filter(F.col("event_type") == "click")
-    errors_s = stream.filter(F.col("event_type") == "error")
-    run_available_now(
-        click_error_attribution(clicks_s, errors_s),
-        "click_error_attr",
-        output_mode="append",
-    )
-    got = {
-        tuple(r)
-        for r in spark.table("click_error_attr").collect()
-    }
-
-    batch = load_table(spark, sf_dir, "events")
-    clicks_b = batch.filter(F.col("event_type") == "click")
-    errors_b = batch.filter(F.col("event_type") == "error")
-    exp = {
-        tuple(r)
-        for r in click_error_attribution(clicks_b, errors_b).collect()
-    }
-    assert got == exp
-    assert len(got) > 0
-
-
 def test_stream_merge_upsert_incremental(spark, sf_dir, tmp_path):
     """Streaming incremental ingestion: micro-batches MERGE into a parquet
     table by key, so draining a source whose later files update earlier
@@ -174,57 +122,6 @@ def test_stream_merge_upsert_incremental(spark, sf_dir, tmp_path):
     again = spark.read.parquet(target)
     assert again.count() == n_ids
     assert again.filter(F.col("value") == 2.0).count() == 200
-
-
-def test_streaming_neardup_gate(spark, tmp_path):
-    """Near-dup ingestion gate: reformatted copies (case/whitespace) share a
-    simhash fingerprint and are dropped within the watermark; distinct texts
-    all pass."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from movie_recommendation_etl_spark.streaming.dedup import (
-        neardup_gated_documents,
-    )
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    distinct_texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "pack my box with five dozen liquor jugs",
-        "sphinx of black quartz judge my vow",
-    ]
-    rows = []
-    doc_id = 0
-    for text in distinct_texts:
-        for variant in (text, text.upper(), "  " + text.replace(" ", "   ")):
-            rows.append((doc_id, variant, t0 + dt.timedelta(seconds=doc_id)))
-            doc_id += 1
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    src = str(tmp_path / "docs_stream_src")
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src)
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    run_available_now(
-        neardup_gated_documents(stream), "neardup_gate", output_mode="append"
-    )
-    got = spark.table("neardup_gate").collect()
-    # one survivor per distinct text (3 variants each collapse to one)
-    assert len(got) == len(distinct_texts)
-    survived = {r["text"].strip().lower().split()[0] for r in got}
-    assert survived == {t.split()[0] for t in distinct_texts}
-    # passthrough schema: the fingerprint column does not leak
-    assert set(spark.table("neardup_gate").columns) == {
-        "doc_id", "text", "ts"
-    }
 
 
 def test_streaming_contamination_gate_matches_batch(spark, tmp_path):
@@ -446,62 +343,6 @@ def test_q30_stream_arm_nanos_timestamp_fallback(spark, tmp_path):
         )
     )
     assert got == exp and len(got) > 0
-
-
-def test_stream_static_enrichment_matches_batch(spark, sf_dir, tmp_path):
-    """Stream-static join: events stream LEFT-joined per micro-batch onto
-    a static per-user profile must emit exactly the batch join's rows
-    (including stream rows whose key misses the dimension), and the
-    unsupported join sides fail fast."""
-    import pytest as _pytest
-
-    from movie_recommendation_etl_spark.sources.catalog import load_table
-    from movie_recommendation_etl_spark.streaming.joins import (
-        enrich_with_static,
-    )
-    from movie_recommendation_etl_spark.streaming.windows import (
-        read_events_stream,
-    )
-
-    events = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "events_src")
-    events.repartition(4).write.mode("overwrite").parquet(src)
-    # static profile: per-user spend tier, MISSING half the users so the
-    # left join's null path is genuinely exercised
-    dim = (
-        events.groupBy("user_id")
-        .agg(F.sum("value").alias("lifetime_value"))
-        .filter(F.col("user_id") % 2 == 0)
-    )
-
-    stream = read_events_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        enrich_with_static(
-            stream.select("event_id", "user_id"), dim, key="user_id"
-        )
-        .writeStream.format("memory")
-        .queryName("enriched")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = {
-        (r["event_id"], r["lifetime_value"])
-        for r in spark.table("enriched").collect()
-    }
-    expected = {
-        (r["event_id"], r["lifetime_value"])
-        for r in events.select("event_id", "user_id")
-        .join(dim, "user_id", "left")
-        .collect()
-    }
-    assert got == expected
-    assert any(v is None for _, v in got)  # missing-dim rows survived
-
-    with _pytest.raises(ValueError, match="left/inner"):
-        enrich_with_static(stream, dim, how="full")
 
 
 def test_gap_fill_matches_python_replay_on_random_sparse_events(spark):

@@ -1,131 +1,12 @@
-"""applyInPandasWithState correctness: after draining the stream across
-several micro-batches, the final per-user state must equal the batch
-groupBy totals."""
+"""Streaming Misra-Gries twin (streaming.heavy_hitters): after draining a
+stream across several micro-batches, the candidate state must honour the
+batch operator's superset theorem and its driver-side bounds."""
 
 from __future__ import annotations
 
-import importlib
-import math
-
-import pytest
 from pyspark.sql import functions as F
 
 from movie_recommendation_etl_spark.sources.catalog import load_table
-from movie_recommendation_etl_spark.streaming.stateful import (
-    running_user_totals,
-)
-from movie_recommendation_etl_spark.streaming.windows import (
-    read_events_stream,
-)
-
-
-def test_stateful_running_totals_match_batch(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "events_src")
-    # several files -> several micro-batches -> state actually accumulates
-    batch = load_table(spark, sf_dir, "events")
-    batch.repartition(6).write.mode("overwrite").parquet(src)
-
-    stream = read_events_stream(spark, src, max_files_per_trigger=2)
-    q = (
-        running_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("user_totals")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    emitted = spark.table("user_totals").collect()
-    # totals are monotone; the final state per user is the max n_events row
-    final: dict[int, tuple[int, float]] = {}
-    for r in emitted:
-        cur = final.get(r["user_id"])
-        if cur is None or r["n_events"] > cur[0]:
-            final[r["user_id"]] = (r["n_events"], r["total_value"])
-
-    expected = {
-        r["user_id"]: (r["n"], r["s"])
-        for r in batch.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert set(final) == set(expected)
-    for uid, (n, total) in expected.items():
-        got_n, got_total = final[uid]
-        assert got_n == n
-        assert math.isclose(got_total, total, rel_tol=1e-9)
-    # state genuinely accumulated across multiple triggers
-    assert len(emitted) > len(expected)
-
-
-def _has_protobuf() -> bool:
-    try:
-        importlib.import_module("google.protobuf")
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas state protocol needs protobuf — "
-    "no wheel ships in this container and there is no network for pip. "
-    "conftest activates vendor/protobuf_compat (a path-forwarding shim "
-    "over the OS google-cloud-sdk's bundled pure-Python runtime) when "
-    "available, so this skip only fires where NO runtime exists at all",
-)
-def test_transform_with_state_matches_batch(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas twin: same final per-user totals as the
-    batch groupBy (and as the applyInPandasWithState op above)."""
-    from movie_recommendation_etl_spark.streaming.stateful import (
-        running_user_totals_tws,
-        use_rocksdb_state_store,
-    )
-
-    src = str(tmp_path / "events_src_tws")
-    batch = load_table(spark, sf_dir, "events")
-    batch.repartition(6).write.mode("overwrite").parquet(src)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    use_rocksdb_state_store(spark)
-    try:
-        stream = read_events_stream(spark, src, max_files_per_trigger=2)
-        q = (
-            running_user_totals_tws(stream)
-            .writeStream.format("memory")
-            .queryName("user_totals_tws")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    emitted = spark.table("user_totals_tws").collect()
-    final: dict[int, tuple[int, float]] = {}
-    for r in emitted:
-        cur = final.get(r["user_id"])
-        if cur is None or r["n_events"] > cur[0]:
-            final[r["user_id"]] = (r["n_events"], r["total_value"])
-
-    expected = {
-        r["user_id"]: (r["n"], r["s"])
-        for r in batch.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert set(final) == set(expected)
-    for uid, (n, total) in expected.items():
-        got_n, got_total = final[uid]
-        assert got_n == n
-        assert math.isclose(got_total, total, rel_tol=1e-9)
 
 
 def test_streaming_mg_candidates_superset_and_exact_confirm(
