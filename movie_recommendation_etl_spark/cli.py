@@ -149,7 +149,8 @@ def _cmd_recommend(args: argparse.Namespace) -> int:
     model = load_lsh_model(f"{args.out_dir}/lsh_model")
     if Path(f"{args.out_dir}/ann_index").exists():
         # Persisted index (see index-build): cold start skips the
-        # whole-corpus LSH re-transform.
+        # whole-corpus LSH re-transform, and the request runs in the
+        # driver without a Spark job.
         index = load_ann_index(spark, f"{args.out_dir}/ann_index")
     else:
         vecs = spark.read.parquet(f"{args.out_dir}/vector")

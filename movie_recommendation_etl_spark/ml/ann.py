@@ -8,17 +8,48 @@ module reproduces that shape with a *seeded* BucketedRandomProjectionLSH
 §5.4 pins determinism) plus a batch variant built on approxSimilarityJoin
 for many-query workloads (per-query driver loops don't scale; a single
 hash-join over bucketed candidates does).
+
+:func:`recommend` has two paths, chosen by the type of its index argument:
+
+- a ``DataFrame`` (the :func:`prepare_index` frame) runs the Spark chain —
+  point lookup, ``approxNearestNeighbors``, sort, collect: 3 jobs and 7
+  tasks per request. It is the reference the driver path is tested
+  against, and q70's path.
+- an :class:`LshIndex` (what ``sources.writers.load_ann_index`` returns)
+  answers in the calling process with numpy and launches no Spark job.
+  It keeps MLlib's single-probe semantics: candidates are the docs that
+  share a bucket with the query in at least one hash table, ranked by
+  exact L2 distance. Distances are summed in the order MLlib sums them,
+  so both paths return the same ids, ranks and distances (up to ties at
+  the (k+1)-th distance, which MLlib breaks arbitrarily).
+
+At the reference's bucket length 1.95 on unit vectors a projection lies
+in [-1, 1], so each table has only two buckets (-1 and 0) and the
+candidates are ≈100% of the corpus (0.99995 measured on the benchmark's
+7.7k-doc serve corpus): a request costs one pass over every stored
+nonzero. Measured on a 4-core VM over that corpus (TF-IDF, 41 nonzeros
+per doc) and over 4x and 16x copies of it: the index takes ≈810 bytes
+per doc in the driver (16 per nonzero, 112 for the 14 bucket values, the
+rest ids, row offsets and norms) and a request ≈7.5 ns per stored
+nonzero (2.6 ms at 7.7k docs, 39 ms at 123k). At the reference's 604k
+docs that is ≈490 MB of driver memory and ≈190 ms per request. On top
+of that, each request in flight allocates one float64 per stored nonzero
+(the per-term products, 8 B/nonzero) plus a few per-doc arrays: ≈200 MB
+per concurrent request at 604k docs.
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.ml.feature import (
     BucketedRandomProjectionLSH,
     BucketedRandomProjectionLSHModel,
     Normalizer,
 )
 from pyspark.ml.functions import array_to_vector, vector_to_array
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -60,17 +91,153 @@ def prepare_index(
     return hashed
 
 
+class LshIndex:
+    """A saved LSH index held in the driver: the id column, the feature
+    vectors as CSR arrays (``indptr``/``indices``/``values``, dense rows
+    stored with every position) and the bucket values as an ``(n,
+    num_hash_tables)`` array. Built by ``sources.writers.load_ann_index``;
+    :func:`recommend` answers from it without Spark. Read-only after
+    construction, so concurrent requests are safe."""
+
+    def __init__(self, table, id_col: str, features_col: str):
+        import pyarrow.compute as pc
+
+        self.id_col, self.features_col = id_col, features_col
+        self.ids = np.asarray(table.column(id_col).to_pylist())
+        n = len(self.ids)
+
+        # VectorUDT is struct<type, size, indices, values>; type 1 = dense
+        vec = table.column(features_col)
+        vals = pc.struct_field(vec, "values")
+        nnz = pc.list_value_length(vals).fill_null(0).to_numpy()
+        self.indptr = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(nnz, out=self.indptr[1:])
+        self.values = pc.list_flatten(vals).to_numpy()
+        row = np.repeat(np.arange(n), nnz)
+        kind = pc.struct_field(vec, "type").to_numpy(zero_copy_only=False)
+        sparse = (kind != 1)[row]
+        # intp: numpy gathers with native-width indices ~3x faster
+        self.indices = np.arange(len(row)) - self.indptr[row]
+        self.indices[sparse] = pc.list_flatten(
+            pc.struct_field(vec, "indices")
+        ).to_numpy()
+        self.dim = int(self.indices.max()) + 1 if len(self.indices) else 0
+        self.sq_norms = np.bincount(row, weights=self.values**2, minlength=n)
+        self._empty = nnz == 0
+
+        # hashes: one size-1 dense vector per table
+        hashes = table.column("hashes")
+        tables = pc.list_value_length(hashes).fill_null(0).to_numpy()
+        h = pc.list_flatten(pc.struct_field(pc.list_flatten(hashes), "values"))
+        if n and (np.any(tables != tables[0]) or len(h) != n * tables[0]):
+            raise ValueError(
+                "hashes: every row needs one single-value bucket per table"
+            )
+        # column-major: the per-request any() runs down contiguous tables
+        self.hashes = np.asfortranarray(
+            h.to_numpy().reshape(n, tables[0] if n else 0)
+        )
+
+    def __len__(self) -> int:
+        return len(self.ids)
+
+    def _sqdist(self, r: int, qi: np.ndarray, qv: np.ndarray) -> float:
+        """Vectors.sqdist(row r, query): squared differences over the
+        union of both index sets, summed in index order as MLlib does
+        (cumsum is sequential), so the distance is bit-identical."""
+        lo, hi = self.indptr[r], self.indptr[r + 1]
+        xi = self.indices[lo:hi]
+        u = np.union1d(xi, qi)
+        if not len(u):
+            return 0.0
+        d = np.zeros(len(u))
+        d[np.searchsorted(u, xi)] = self.values[lo:hi]
+        d[np.searchsorted(u, qi)] -= qv
+        return float(np.cumsum(d * d)[-1])
+
+    def neighbors(self, query_id, top_k: int) -> list[tuple]:
+        """(id, dist) of the top_k nearest single-probe candidates,
+        ordered by (dist, id), the query's own id excluded; [] when the id
+        is absent."""
+        is_query = self.ids == query_id
+        hit = np.flatnonzero(is_query)
+        if not len(hit) or top_k <= 0:
+            return []
+        r = hit[0]
+        lo, hi = self.indptr[r], self.indptr[r + 1]
+        qi, qv = self.indices[lo:hi], self.values[lo:hi]
+        # single probe: same bucket as the query in at least one table
+        cand = (self.hashes == self.hashes[r]).any(axis=1)
+        cand &= ~is_query
+        rows = np.flatnonzero(cand)
+        if len(rows) > top_k:
+            # Screen with |x|^2 + |q|^2 - 2 x.q, which is off by a few ulp
+            # of its terms, and keep every row within a wide slack of the
+            # k-th screened value; only those get the exact distance.
+            q = np.zeros(self.dim)
+            q[qi] = qv
+            qn = float(qv @ qv)
+            # per-row dots by reduceat over the row offsets; the trailing
+            # 0.0 keeps every offset in range (a last row that is empty
+            # starts at nnz), and an empty row, whose slice reduceat reads
+            # as the next row's first product, is zeroed after it
+            prod = np.empty(len(self.values) + 1)
+            # indices < dim by construction; "clip" skips the copy that
+            # take's default "raise" makes when given out=
+            np.take(q, self.indices, out=prod[:-1], mode="clip")
+            prod[:-1] *= self.values
+            prod[-1] = 0.0
+            dots = np.add.reduceat(prod, self.indptr[:-1])
+            dots[self._empty] = 0.0
+            approx = self.sq_norms[rows] + qn - 2.0 * dots[rows]
+            kth = np.partition(approx, top_k - 1)[top_k - 1]
+            rows = rows[approx <= kth + 1e-9 * (1.0 + qn + abs(kth))]
+        found = [(math.sqrt(self._sqdist(j, qi, qv)), j) for j in rows]
+        found.sort(key=lambda t: (t[0], self.ids[t[1]]))
+        found = found[:top_k]
+        ids = self.ids[[j for _, j in found]].tolist()
+        return [(i, d) for i, (d, _) in zip(ids, found)]
+
+
+class Recommendations(list):
+    """Rows ``(id_col, rank, dist)`` from the driver path; ``collect()``
+    returns them, so callers treat it like the Spark path's frame."""
+
+    def collect(self) -> list:
+        return list(self)
+
+
 def recommend(
     model: BucketedRandomProjectionLSHModel,
-    df: DataFrame,
+    df: DataFrame | LshIndex,
     id_col: str,
     query_id,
     top_k: int = 5,
     features_col: str = "norm_features",
-) -> DataFrame:
+) -> DataFrame | Recommendations:
     """The reference's get_recommendations shape (execute.ipynb:1645-1670):
     point lookup → approxNearestNeighbors(k+1) → drop self → top-k.
-    Returns (id, rank, dist), nearest first. Missing id → empty frame."""
+    Returns (id, rank, dist), nearest first. Missing id → no rows.
+
+    On an :class:`LshIndex` the answer is computed in this process (no
+    Spark job; ``model`` is not used — the index stores the query's
+    buckets) and comes back as :class:`Recommendations`; ``id_col`` and
+    ``features_col`` must be the columns the index was loaded with. The
+    candidates are the same as MLlib's, and the (dist, id) order is
+    applied to all of them rather than to the k+1 nearest. On a
+    DataFrame it returns the lazy Spark frame."""
+    if isinstance(df, LshIndex):
+        if (id_col, features_col) != (df.id_col, df.features_col):
+            raise ValueError(
+                f"index was loaded with id_col={df.id_col!r}, "
+                f"features_col={df.features_col!r}; got {id_col!r}, "
+                f"{features_col!r}"
+            )
+        out = Row(id_col, "rank", "dist")
+        return Recommendations(
+            out(i, rank, d)
+            for rank, (i, d) in enumerate(df.neighbors(query_id, top_k), 1)
+        )
     row = df.filter(F.col(id_col) == query_id).select(features_col).first()
     if row is None:
         return df.sparkSession.createDataFrame(

@@ -54,6 +54,12 @@ PINNED = (
     "q63_embedding_outliers",
 )
 
+# Partition counts are part of a physical plan (RoundRobinPartitioning(n),
+# shuffle partitions), so plans are captured and checked at one fixed
+# parallelism rather than the host's core count; plans_pinned/ was
+# captured at 32.
+PINNED_PARALLELISM = 32
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -72,6 +78,8 @@ def _normalize(plan: str) -> str:
 
 def main() -> int:
     check = "--check" in sys.argv[1:]
+    # read by session.default_parallelism (local[N], shuffle partitions)
+    os.environ["SPARK_GRAFT_CPUS"] = str(PINNED_PARALLELISM)
 
     import __spark_entry__ as E
     from movie_recommendation_etl_spark.plans.text_analysis import (

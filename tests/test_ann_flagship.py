@@ -228,9 +228,9 @@ def test_lsh_model_roundtrip(spark, sf_dir, tmp_path):
 
 def test_ann_index_roundtrip(spark, sf_dir, tmp_path):
     """Cold-start serving path: save_ann_index + load_ann_index must
-    reconstruct the warm index — hashes column intact (so MLlib skips the
-    per-query corpus re-transform), cached, and recommend() over the loaded
-    index + loaded model returns exactly the fresh answer."""
+    reconstruct the index in the driver — every row, with its 14 stored
+    LSH bucket values — and recommend() over the loaded index + loaded
+    model returns exactly the fresh Spark answer."""
     from movie_recommendation_etl_spark.ml.ann import (
         prepare_index,
         recommend,
@@ -250,14 +250,14 @@ def test_ann_index_roundtrip(spark, sf_dir, tmp_path):
     mpath, ipath = str(tmp_path / "lsh_model"), str(tmp_path / "ann_index")
     save_model(model, mpath)
     save_ann_index(index, ipath)
-    model2, index2 = load_lsh_model(mpath), load_ann_index(spark, ipath)
+    model2 = load_lsh_model(mpath)
+    index2 = load_ann_index(spark, ipath, id_col="doc_id")
     try:
-        assert "hashes" in index2.columns
-        assert index2.storageLevel.useMemory
+        assert len(index2) == vecs.count()
+        assert index2.hashes.shape == (len(index2), 14)
         served = recommend(model2, index2, "doc_id", 42, top_k=5).collect()
         assert [tuple(r) for r in served] == [tuple(r) for r in fresh]
     finally:
-        index2.unpersist()
         vecs.unpersist()
         index.unpersist()
 
@@ -290,17 +290,236 @@ def test_ann_index_incremental_append(spark, sf_dir, tmp_path):
     ipath = str(tmp_path / "ann_index")
     save_ann_index(index, ipath)
     append_ann_index(lsh, transform_document_vectors(model, new), ipath)
-    loaded = load_ann_index(spark, ipath)
+    loaded = load_ann_index(spark, ipath, id_col="doc_id")
     try:
-        assert loaded.count() == docs.count()
+        all_ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
+        assert sorted(loaded.ids.tolist()) == all_ids
+        assert loaded.hashes.shape == (len(all_ids), 14)
         full = lsh.transform(transform_document_vectors(model, docs))
         a = recommend(lsh, loaded, "doc_id", 42, top_k=5).collect()
         b = recommend(lsh, full, "doc_id", 42, top_k=5).collect()
         assert [tuple(r) for r in a] == [tuple(r) for r in b]
         assert len(a) == 5
     finally:
-        loaded.unpersist()
         vecs_old.unpersist()
+        index.unpersist()
+
+
+def _spark_answers(model, index, id_col, query_ids, top_k):
+    """The Spark recommend() answer per query id, sixteen requests at a
+    time: each is a short chain of small jobs, and overlapping their
+    scheduling waits runs the 501 requests ≈17% faster than four at a
+    time on 4 cores."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from movie_recommendation_etl_spark.ml.ann import recommend
+
+    def one(q):
+        return recommend(model, index, id_col, q, top_k=top_k).collect()
+
+    with ThreadPoolExecutor(16) as pool:
+        return dict(zip(query_ids, pool.map(one, query_ids)))
+
+
+def _assert_same_answers(driver, spark_side, id_col):
+    for q, want in spark_side.items():
+        got = driver[q]
+        assert [(r[id_col], r["rank"]) for r in got] == [
+            (r[id_col], r["rank"]) for r in want
+        ], q
+        assert all(
+            abs(a["dist"] - b["dist"]) <= 1e-12 for a, b in zip(got, want)
+        ), q
+
+
+def test_loaded_index_matches_spark_recommend(spark, sf_dir, tmp_path):
+    """The driver-resident index (load_ann_index) against the Spark path
+    it replaces (recommend on the prepare_index frame of the same model):
+    for every doc_id and one absent id, identical (id, rank) lists and
+    distances within 1e-12, and the driver path launches no Spark job."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from movie_recommendation_etl_spark.ml.ann import (
+        prepare_index,
+        recommend,
+    )
+    from movie_recommendation_etl_spark.sources.writers import (
+        load_ann_index,
+        save_ann_index,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    _, vecs = fit_document_vectors(docs)
+    vecs = vecs.cache()
+    model = fit_lsh(vecs)
+    index = prepare_index(model, vecs)
+    ipath = str(tmp_path / "ann_index")
+    save_ann_index(index, ipath)
+    try:
+        ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
+        assert len(ids) == 500
+        queries = [*ids, max(ids) + 1]
+        loaded = load_ann_index(spark, ipath, id_col="doc_id")
+        sc = spark.sparkContext
+
+        def jobs_of(group, fn):
+            sc.setJobGroup(group, group)
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return out, sc.statusTracker().getJobIdsForGroup(group)
+
+        driver, jobs = jobs_of("driver-path-recommend", lambda: {
+            q: recommend(model, loaded, "doc_id", q, top_k=5).collect()
+            for q in queries
+        })
+        assert jobs == []
+        # the same count sees the Spark path's jobs
+        _, jobs = jobs_of("spark-path-recommend", lambda: recommend(
+            model, index, "doc_id", ids[0], top_k=5
+        ).collect())
+        assert len(jobs) > 0
+        # the loaded index is shared read-only: concurrent requests (more
+        # threads than cores, short switch interval) give the same answers
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(16) as pool:
+                threaded = list(pool.map(
+                    lambda q: recommend(model, loaded, "doc_id", q, 5),
+                    queries,
+                    timeout=120,
+                ))
+        finally:
+            sys.setswitchinterval(switch)
+        assert threaded == [driver[q] for q in queries]
+        spark_side = _spark_answers(model, index, "doc_id", queries, 5)
+        assert driver[queries[-1]] == [] and spark_side[queries[-1]] == []
+        assert all(len(driver[q]) == 5 for q in ids)
+        _assert_same_answers(driver, spark_side, "doc_id")
+    finally:
+        vecs.unpersist()
+        index.unpersist()
+
+
+def test_loaded_index_dense_string_ids(spark, sf_dir, tmp_path):
+    """Dense feature rows (embeddings_as_vectors output) and string ids
+    load and answer like the Spark path; loading a frame saved without
+    prepare_index fails with one ValueError, and recommend refuses
+    columns the index was not loaded with."""
+    import pytest
+
+    from movie_recommendation_etl_spark.ml.ann import (
+        embeddings_as_vectors,
+        prepare_index,
+        recommend,
+    )
+    from movie_recommendation_etl_spark.sources.writers import (
+        load_ann_index,
+        save_ann_index,
+    )
+
+    emb = embeddings_as_vectors(spark, sf_dir).select(
+        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("key"),
+        "norm_vec",
+    )
+    model = fit_lsh(emb, "norm_vec")
+    index = prepare_index(model, emb)
+    ipath = str(tmp_path / "ann_index")
+    save_ann_index(index, ipath)
+    try:
+        loaded = load_ann_index(
+            spark, ipath, id_col="key", features_col="norm_vec"
+        )
+        assert len(loaded) == 500 and loaded.dim == 64
+        queries = ["v0", "v7", "v42", "v123", "v499"]
+        driver = {
+            q: recommend(
+                model, loaded, "key", q, top_k=5, features_col="norm_vec"
+            ).collect()
+            for q in queries
+        }
+        spark_side = {
+            q: recommend(
+                model, index, "key", q, top_k=5, features_col="norm_vec"
+            ).collect()
+            for q in queries
+        }
+        assert all(len(driver[q]) == 5 for q in queries)
+        _assert_same_answers(driver, spark_side, "key")
+        with pytest.raises(ValueError, match="features_col"):
+            recommend(model, loaded, "key", "v0", top_k=5)
+        with pytest.raises(ValueError, match="id_col"):
+            recommend(model, loaded, "vec_id", 0, features_col="norm_vec")
+
+        bare = str(tmp_path / "no_hashes")
+        save_ann_index(emb, bare)
+        with pytest.raises(ValueError, match="hashes"):
+            load_ann_index(spark, bare, id_col="key", features_col="norm_vec")
+    finally:
+        index.unpersist()
+
+
+def test_loaded_index_trailing_empty_vector(spark, tmp_path):
+    """An empty feature vector (a document with only rare terms) stored
+    last, right after a multi-term row that is the query's true nearest
+    neighbour: the driver path must still screen that row in and agree
+    with the Spark path; an index of only empty vectors still answers."""
+    import math
+
+    from pyspark.ml.linalg import SparseVector
+
+    from movie_recommendation_etl_spark.ml.ann import (
+        prepare_index,
+        recommend,
+    )
+    from movie_recommendation_etl_spark.sources.writers import (
+        load_ann_index,
+        save_ann_index,
+    )
+
+    def unit(terms):
+        norm = math.sqrt(sum(v * v for v in terms.values()))
+        return SparseVector(8, {i: v / norm for i, v in terms.items()})
+
+    # no two distances tie for queries 0-4 (ties at the (k+1)-th
+    # distance are broken arbitrarily by MLlib); every unit vector is at
+    # distance 1 from the empty row 5, so 5 is not used as a query
+    rows = [
+        (0, unit({0: 1, 7: 1})),
+        (1, unit({1: 1, 7: 0.3})),
+        (2, unit({2: 1, 3: 0.5, 7: 0.2})),
+        (3, unit({0: 1, 3: 1, 7: 0.1})),
+        # nearest to 0; its last term carries most of the dot product
+        (4, unit({0: 0.6, 7: 0.8})),
+        (5, SparseVector(8, [], [])),
+    ]
+    vecs = spark.createDataFrame(rows, ["id", "norm_features"]).coalesce(1)
+    model = fit_lsh(vecs)
+    index = prepare_index(model, vecs)
+    ipath = str(tmp_path / "ann_index")
+    save_ann_index(index, ipath)
+    try:
+        loaded = load_ann_index(spark, ipath)
+        assert loaded.ids.tolist() == [0, 1, 2, 3, 4, 5]
+        assert [r["id"] for r in recommend(model, loaded, "id", 0, 1)] == [4]
+        for q in range(5):
+            for k in (1, 3):
+                driver = {q: recommend(model, loaded, "id", q, k).collect()}
+                spark_side = {q: recommend(model, index, "id", q, k).collect()}
+                _assert_same_answers(driver, spark_side, "id")
+
+        empty = spark.createDataFrame(
+            [(i, SparseVector(8, [], [])) for i in range(3)],
+            ["id", "norm_features"],
+        )
+        epath = str(tmp_path / "empty_index")
+        save_ann_index(model.transform(empty), epath)
+        got = recommend(model, load_ann_index(spark, epath), "id", 1, 1)
+        assert [tuple(r) for r in got] == [(0, 1, 0.0)]
+    finally:
         index.unpersist()
 
 

@@ -20,6 +20,14 @@ def _plan(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture(scope="module")
+def oracle_plans(spark, sf_dir) -> dict[str, str]:
+    """Every oracled query's physical plan, built once and shared by the
+    registry-wide sweeps below (a build is a full planning pass, and some
+    queries run a streaming drain or an index build to plan)."""
+    return {name: _plan(spark, sf_dir, name) for name in sorted(ORACLE)}
+
+
 def test_broadcast_and_topk_q02(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q02_top_revenue_orders")
     assert "BroadcastHashJoin" in plan
@@ -65,13 +73,12 @@ def test_range_join_broadcasts_dim(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_no_cartesian_products_anywhere(spark, sf_dir):
-    for name in sorted(ORACLE):
-        plan = _plan(spark, sf_dir, name)
+def test_no_cartesian_products_anywhere(oracle_plans):
+    for name, plan in oracle_plans.items():
         assert "CartesianProduct" not in plan, name
 
 
-def test_no_python_row_udfs_in_relational_plans(spark, sf_dir):
+def test_no_python_row_udfs_in_relational_plans(oracle_plans):
     """Row-at-a-time Python UDFs (BatchEvalPython) are banned everywhere.
     The Arrow-batched hop (ArrowEvalPython) is sanctioned in EXACTLY one
     oracled plan: q40's broadcast-lemma arm, whose entire point is to
@@ -79,8 +86,7 @@ def test_no_python_row_udfs_in_relational_plans(spark, sf_dir):
     query growing an Arrow node means a built-in expression silently
     degraded to Python."""
     arrow_allowed = {"q40_text_profile_suite"}
-    for name in sorted(ORACLE):
-        plan = _plan(spark, sf_dir, name)
+    for name, plan in oracle_plans.items():
         assert "BatchEvalPython" not in plan, name
         assert "PythonUDF" not in plan, name
         if name not in arrow_allowed:
@@ -235,14 +241,13 @@ def test_substring_dedup_hash_aggregates_grams(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_map_in_pandas_confined_to_mg_candidates(spark, sf_dir):
+def test_map_in_pandas_confined_to_mg_candidates(oracle_plans):
     """MapInPandas (the per-partition imperative hop) is sanctioned in
     EXACTLY one oracled plan: q48's Misra-Gries candidate stage, whose
     entire point is bounded-state summarization that Catalyst cannot
     express. Any other query growing a MapInPandas node means a
     declarative plan silently degraded to Python."""
-    for name in sorted(ORACLE):
-        plan = _plan(spark, sf_dir, name)
+    for name, plan in oracle_plans.items():
         if name == "q48_heavy_hitters":
             assert "MapInPandas" in plan, name
         else:
