@@ -84,11 +84,10 @@ def prepare_index(
     re-transforms the whole dataset PER QUERY when the hashes column is
     missing — on a 604k-doc corpus that's ~60 s/query of avoidable work
     (measured); against a prepared index the same query is interactive.
-    Call once after fit, pass the result as the dataset for every query."""
-    hashed = model.transform(df)
-    hashed = hashed.persist()
-    hashed.count()
-    return hashed
+    Call once after fit, pass the result as the dataset for every query.
+    The frame is persisted, not forced: it fills on its first action
+    (the index write, or the first query)."""
+    return model.transform(df).persist()
 
 
 class LshIndex:

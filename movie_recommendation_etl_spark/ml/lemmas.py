@@ -20,14 +20,16 @@ lemmatizer actually needs:
    irregular fixture (ml/lemmas_en_small.json), exactly the split a
    published lemma list encodes.
 
-Scale shape: induction is two vocabulary-sized aggregations and one
-equi-join on token strings — O(|vocab|), never O(corpus tokens) past the
-first tokenize+count, and every step is built-in Catalyst (the candidate
-generator is one SQL expression, no Python). The final dict collects to
-the driver bounded by ``max_entries`` — the same driver-resident bound the
-reference accepts by broadcasting AntBNC into its transform closures
-(SURVEY §4 broadcast row); past ~1M entries prefer a map-side join against
-a lemma table over a broadcast dict.
+Scale shape: induction is one aggregation (tokenize and count, one
+shuffle on token) whose distinct-token counts are collected to the driver;
+the reverse rules then run in Python over those distinct tokens. So it
+reads the corpus once, and the driver holds one (token, count) pair per
+distinct token: ≈15k for the 2k-row benchmark corpus, ≈28k for the
+12k-row serve corpus, ≈100 B each in the driver's dict (more while the
+collected rows are alive). A million-token vocabulary costs ≈100 MB, the
+same driver-resident bound the reference accepts by broadcasting AntBNC
+into its transform closures (SURVEY §4 broadcast row). The map returned
+is bounded by ``max_entries``.
 """
 
 from __future__ import annotations
@@ -37,7 +39,6 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 # Final CVC (consonant-vowel-consonant, last consonant not w/x/y): the
 # standard orthographic trigger for consonant doubling ("stop"→"stopped")
@@ -88,58 +89,41 @@ def expand_inflections(lemmas: Iterable[str]) -> dict[str, str]:
     return out
 
 
-def candidate_lemmas_sql(tok: str = "tok") -> str:
-    """SQL expression: array of candidate lemmas for column ``tok``, best
-    candidate first, NULL slots for rules that do not apply (callers strip
-    them). Reverse of :func:`expand_inflections`, with the CVC heuristic
-    ordering the ``-ed``/``-ing`` ambiguity (e-restored base first exactly
-    when a bare base would have doubled: "hoping"→hope before hop, but
-    "walking"→walk before walke). One Catalyst expression — assembled as a
-    SQL string like operators/neardup.py:srp_bands, and for the same
-    reason: it runs per *vocabulary entry*, so plan-time assembly beats
-    Py4J-built trees."""
-    t = f"`{tok}`"
-    L = f"length({t})"
-
-    def strip(k: int, add: str = "") -> str:
-        s = f"substring({t}, 1, {L} - {k})"
-        return f"concat({s}, '{add}')" if add else s
-
-    def when(cond: str, val: str) -> str:
-        return f"(CASE WHEN {cond} THEN {val} END)"
-
-    ed_cvc = f"{t} RLIKE '{_CVC}ed$'"
-    ing_cvc = f"{t} RLIKE '{_CVC}ing$'"
-    cands = [
-        # -s family (most specific first)
-        when(f"{t} RLIKE '..ies$'", strip(3, "y")),
-        when(f"{t} RLIKE '(ch|sh|s|x|z)es$'", strip(2)),
-        when(f"{t} RLIKE '[^siu]s$'", strip(1)),
-        # -ed family: doubled-consonant undouble, then the CVC-ordered
-        # e-restored / bare-strip pair
-        when(
-            f"{t} RLIKE '..ed$' AND substring({t}, {L} - 2, 1) = "
-            f"substring({t}, {L} - 3, 1) AND "
-            f"substring({t}, {L} - 2, 1) NOT RLIKE '[aeiou]'",
-            strip(3),
-        ),
-        when(f"{t} RLIKE '..ied$'", strip(3, "y")),
-        when(f"{t} RLIKE '..ed$' AND {ed_cvc}", strip(1)),
-        when(f"{t} RLIKE '..ed$'", strip(2)),
-        when(f"{t} RLIKE '..ed$' AND NOT {ed_cvc}", strip(1)),
-        # -ing family, same shape
-        when(f"{t} RLIKE '..ying$'", strip(4, "ie")),
-        when(
-            f"{t} RLIKE '..ing$' AND substring({t}, {L} - 3, 1) = "
-            f"substring({t}, {L} - 4, 1) AND "
-            f"substring({t}, {L} - 3, 1) NOT RLIKE '[aeiou]'",
-            strip(4),
-        ),
-        when(f"{t} RLIKE '..ing$' AND {ing_cvc}", strip(3, "e")),
-        when(f"{t} RLIKE '..ing$'", strip(3)),
-        when(f"{t} RLIKE '..ing$' AND NOT {ing_cvc}", strip(3, "e")),
-    ]
-    return "array(" + ", ".join(cands) + ")"
+def candidate_lemmas(tok: str) -> list[str]:
+    """Candidate lemmas for ``tok``, best candidate first. Reverse of
+    :func:`expand_inflections`, with the CVC heuristic ordering the
+    ``-ed``/``-ing`` ambiguity (e-restored base first exactly when a bare
+    base would have doubled: "hoping"→hope before hop, but
+    "walking"→walk before walke). Candidates may repeat or be junk
+    ("gas"→"ga"); :func:`induce_lemma_map` keeps only attested ones."""
+    out: list[str] = []
+    n = len(tok)
+    # -s family (most specific first)
+    if re.search(r"..ies$", tok):
+        out.append(tok[:-3] + "y")
+    if re.search(r"(ch|sh|s|x|z)es$", tok):
+        out.append(tok[:-2])
+    if re.search(r"[^siu]s$", tok):
+        out.append(tok[:-1])
+    # -ed family: doubled-consonant undouble, then the CVC-ordered
+    # e-restored / bare-strip pair
+    if n >= 4 and tok.endswith("ed"):
+        if tok[-3] == tok[-4] and tok[-3] not in "aeiou":
+            out.append(tok[:-3])
+        if n >= 5 and tok.endswith("ied"):
+            out.append(tok[:-3] + "y")
+        cvc = re.search(_CVC + "ed$", tok) is not None
+        out += [tok[:-1], tok[:-2]] if cvc else [tok[:-2], tok[:-1]]
+    # -ing family, same shape
+    if n >= 5 and tok.endswith("ing"):
+        if n >= 6 and tok.endswith("ying"):
+            out.append(tok[:-4] + "ie")
+        if tok[-4] == tok[-5] and tok[-4] not in "aeiou":
+            out.append(tok[:-4])
+        cvc = re.search(_CVC + "ing$", tok) is not None
+        stem = tok[:-3]
+        out += [stem + "e", stem] if cvc else [stem, stem + "e"]
+    return out
 
 
 def induce_lemma_map(
@@ -155,39 +139,26 @@ def induce_lemma_map(
     matches the TF-IDF pipeline's RegexTokenizer (lowercase, split on
     \\W+), so induced keys align with the tokens the lemma stage will see.
 
-    Distributed end-to-end: tokenize→count (one shuffle on token),
-    candidate explode (vocab-sized), one equi-join back onto the
-    vocabulary, a per-token min-priority window — then one bounded driver
-    collect (``max_entries``) for the broadcast dictionary."""
-    toks = (
+    One distributed aggregation (tokenize→count, one shuffle on token)
+    collected to the driver, where the reverse rules run over the
+    distinct tokens; at most ``max_entries`` entries, in token order."""
+    counts = dict(
         docs.select(
             F.explode(F.split(F.lower(F.col(text_col)), r"\W+")).alias("tok")
         )
         .filter(F.col("tok").rlike("^[a-z]{2,}$"))
         .groupBy("tok")
         .count()
+        .collect()
     )
-    cands = (
-        toks.select(
-            "tok",
-            F.posexplode(F.expr(candidate_lemmas_sql("tok"))).alias(
-                "pri", "cand"
-            ),
-        )
-        .filter(F.col("cand").isNotNull() & (F.length("cand") >= 2))
-        .filter(F.col("cand") != F.col("tok"))
-    )
-    attested = toks.filter(F.col("count") >= min_count).select(
-        F.col("tok").alias("cand")
-    )
-    best = (
-        cands.join(attested, "cand")
-        .withColumn(
-            "rn",
-            F.row_number().over(W.partitionBy("tok").orderBy("pri", "cand")),
-        )
-        .filter(F.col("rn") == 1)
-        .select("tok", "cand")
-        .limit(max_entries)
-    )
-    return {r["tok"]: r["cand"] for r in best.collect()}
+    out: dict[str, str] = {}
+    for tok in sorted(counts):
+        for cand in candidate_lemmas(tok):
+            if len(cand) >= 2 and cand != tok and (
+                counts.get(cand, 0) >= min_count
+            ):
+                out[tok] = cand
+                break
+        if len(out) == max_entries:
+            break
+    return out

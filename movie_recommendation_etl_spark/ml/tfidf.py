@@ -35,6 +35,7 @@ from pyspark.ml import Pipeline, PipelineModel, Transformer
 from pyspark.ml.feature import (
     IDF,
     CountVectorizer,
+    CountVectorizerModel,
     Normalizer,
     RegexTokenizer,
     SQLTransformer,
@@ -192,11 +193,39 @@ def fit_document_vectors(
     **kwargs,
 ) -> tuple[PipelineModel, DataFrame]:
     """Fit + transform; returns (model, docs ⊕ norm_features) with the
-    intermediate columns dropped. The transformed frame should be cached by
-    the caller before multi-query fan-out (the reference's .py pipeline
-    recomputed its lineage 4x by skipping this — SURVEY §3.1 step 6)."""
-    model = build_tfidf_pipeline(text_col, output_col, **kwargs).fit(docs)
-    return model, transform_document_vectors(model, docs)
+    intermediate columns dropped, persisted and materialized (unpersist it
+    when done).
+
+    One pass over ``docs``: the token stages (tokenize, lemmatize, stop)
+    run once into a persisted token frame that the CountVectorizer fit,
+    the IDF fit and the output all read; it is released once the output
+    is materialized. The vocabulary is renumbered in sorted term order
+    before the IDF fit, because CountVectorizer orders equal-count terms by
+    how its input happens to be partitioned: without it every vector
+    index and every LSH bucket would move with the plan or the partition
+    count."""
+    *token_stages, cv, idf, l2 = build_tfidf_pipeline(
+        text_col, output_col, **kwargs
+    ).getStages()
+    toks = PipelineModel(token_stages).transform(docs).persist()
+    try:
+        fitted = cv.fit(toks)
+        counts = CountVectorizerModel.from_vocabulary(
+            sorted(fitted.vocabulary),
+            inputCol=fitted.getInputCol(),
+            outputCol=fitted.getOutputCol(),
+            minTF=fitted.getMinTF(),
+            binary=fitted.getBinary(),
+        )
+        counted = counts.transform(toks)
+        idf_model = idf.fit(counted)
+        model = PipelineModel([*token_stages, counts, idf_model, l2])
+        vecs = l2.transform(idf_model.transform(counted))
+        vecs = _drop_intermediates(vecs).persist()
+        vecs.count()
+    finally:
+        toks.unpersist()
+    return model, vecs
 
 
 def transform_document_vectors(
@@ -206,7 +235,11 @@ def transform_document_vectors(
     idf stay frozen — the incremental-ingest semantics: terms unseen at fit
     time vectorize to nothing rather than shifting every existing vector).
     Same column contract as fit_document_vectors' second return."""
-    return model.transform(docs).drop(
+    return _drop_intermediates(model.transform(docs))
+
+
+def _drop_intermediates(df: DataFrame) -> DataFrame:
+    return df.drop(
         "__tokens", "__lemmas", "__clean_tokens", "__raw_features",
         "__tfidf_features",
     )

@@ -15,7 +15,7 @@ Deliberate divergences (bugs/anti-patterns SURVEY.md says to fix, not copy):
 explicit schema instead of inferSchema (2x scan), deterministic dedup
 survivor instead of dropDuplicates' arbitrary row, a cache before the
 multi-sink fan-out (the reference recomputes its lineage once per sink),
-partitioned parquet sinks (partition pruning downstream), and a seeded LSH.
+and a seeded LSH. The sinks are unpartitioned parquet, as in the reference.
 """
 
 from __future__ import annotations
@@ -180,31 +180,45 @@ def build_features(
     regular-morphology pairs induced from this corpus's own vocabulary
     (ml/lemmas.py — the two public ingredients of a published lemma list).
     Irregulars win collisions. ``lemmatize=False`` restores the r6
-    vocabulary for callers pinned to it."""
-    lemma_map = None
-    if lemmatize:
-        from movie_recommendation_etl_spark.ml.lemmas import induce_lemma_map
-        from movie_recommendation_etl_spark.ml.tfidf import (
-            load_default_lemmas,
-        )
+    vocabulary for callers pinned to it.
 
-        lemma_map = induce_lemma_map(combined, "combined")
-        lemma_map.update(load_default_lemmas())
-    _, vecs = fit_document_vectors(
-        combined, text_col="combined", min_df=min_df, lemma_map=lemma_map
-    )
-    vecs = vecs.cache()
+    ``combined`` is read once: it stays persisted while the lemma
+    induction and the TF-IDF fit read it, and is released (unless the
+    caller had cached it) once the vectors are materialized."""
+    owned = not combined.is_cached
+    if owned:
+        combined = combined.persist()
+    try:
+        lemma_map = None
+        if lemmatize:
+            from movie_recommendation_etl_spark.ml.lemmas import (
+                induce_lemma_map,
+            )
+            from movie_recommendation_etl_spark.ml.tfidf import (
+                load_default_lemmas,
+            )
+
+            lemma_map = induce_lemma_map(combined, "combined")
+            lemma_map.update(load_default_lemmas())
+        _, vecs = fit_document_vectors(
+            combined, text_col="combined", min_df=min_df, lemma_map=lemma_map
+        )
+    finally:
+        if owned:
+            combined.unpersist()
     model = fit_lsh(vecs)
     return vecs, model
 
 
 def save_outputs(vecs: DataFrame, model, out_dir: str) -> None:
-    """The reference's four sinks (transform/execute.py:273-298), partition-
-    pruned and computed from ONE cached frame (no 4x lineage recompute)."""
+    """The reference's four sinks (transform/execute.py:273-298), written
+    unpartitioned as the reference writes them, from ONE cached frame (no
+    4x lineage recompute). ``release_year`` stays an integer column: no
+    reader in the product path prunes on it, and a partitioned layout
+    opens one file per year in every write task."""
     write_parquet(
         vecs.select("id", "title", "poster_path", "release_year"),
         f"{out_dir}/movie_metadata",
-        partition_by=["release_year"],
     )
     write_parquet(
         vecs.select(
@@ -217,7 +231,6 @@ def save_outputs(vecs: DataFrame, model, out_dir: str) -> None:
             "genres_list",
         ),
         f"{out_dir}/master_table",
-        partition_by=["release_year"],
     )
     write_parquet(
         vecs.select("id", "norm_features"), f"{out_dir}/vector"

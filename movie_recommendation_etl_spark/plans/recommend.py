@@ -360,10 +360,9 @@ def _flagship_ann(spark: SparkSession, sf_dir: str):
     neighbor surface and the q70 contract (which also needs the fitted
     CountVectorizer's vocabulary size)."""
     docs = load_table(spark, sf_dir, "documents")
+    # vecs come back cached: the LSH fit and every subsequent ANN query
+    # reuse them without re-running tokenize/TF-IDF
     model, vecs = fit_document_vectors(docs)
-    # Cached: the LSH fit and every subsequent ANN query reuse the vectors
-    # without re-running tokenize/TF-IDF (Spark evicts LRU if memory needs it).
-    vecs = vecs.cache()
     lsh = fit_lsh(vecs)
     index = prepare_index(lsh, vecs)
     return model, recommend(lsh, index, "doc_id", FLAGSHIP_QUERY_DOC, top_k=TOP_K)

@@ -1,13 +1,16 @@
-"""Sinks: partitioned parquet, CSV, JSON-lines, merge/upsert, ML-model
-persistence, JDBC.
+"""Sinks: parquet, CSV, JSON-lines, merge/upsert, ML-model persistence,
+JDBC.
 
 The reference's sinks are four unpartitioned ``write.parquet`` calls
 (reference transform/execute.py:273-298), an LSH-model save (:283), and a
 JDBC writer whose ``mode="append"`` re-inserts on every rerun, violating the
 primary key (reference load/execute.py:91 — a semantics bug SURVEY.md §2.1 S7
-says to fix, not copy). Our writers partition by natural keys so downstream
-scans get partition pruning, and the JDBC path defaults to idempotent
-overwrite (truncate-and-reload) instead of blind append.
+says to fix, not copy). The Stage T sinks (``pipeline.save_outputs``) are
+written unpartitioned, as the reference writes them: no reader in the
+product path prunes on their columns. ``write_parquet`` still takes
+``partition_by`` for a table whose readers do prune, and the JDBC path
+defaults to idempotent overwrite (truncate-and-reload) instead of blind
+append.
 """
 
 from __future__ import annotations

@@ -180,6 +180,22 @@ def test_end_to_end_recommend_and_sinks(spark, movies_fixture, tmp_path):
     assert set(vec_sink.columns) == {"id", "norm_features"}
     assert meta.count() == vecs.count()
 
+    # unpartitioned, as the reference writes them: no release_year=
+    # directories, release_year an int32 column in the files themselves
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    want_ids = sorted(r["id"] for r in vecs.select("id").collect())
+    for sink in ("movie_metadata", "master_table", "vector"):
+        path = f"{out_dir}/{sink}"
+        assert not any(d.startswith("release_year=") for d in os.listdir(path))
+        table = pq.read_table(path)
+        if sink != "vector":
+            assert table.schema.field("release_year").type == pa.int32()
+        assert sorted(table.column("id").to_pylist()) == want_ids
+
     # franchise retrieval golden (reference cells 74-86): a wizard movie's
     # neighbors must be dominated by wizard siblings
     recs = get_recommendations(vecs, model, 100, top_k=4)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from movie_recommendation_etl_spark.ml.tfidf import (
     fit_document_vectors,
     lemmatize,
+    load_default_lemmas,
 )
 from movie_recommendation_etl_spark.sources.catalog import load_table
 
@@ -203,19 +204,28 @@ def test_induce_lemma_map_vocabulary_filtered(spark):
         (1, "hope hoping hoped stop stopped stopping"),
         (2, "study studies studied movie movies"),
         (3, "running gas sing singing"),  # run absent; 'ga' unattested
+        (4, "hop hopping box boxes die dying untie untying"),
     ]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
     m = induce_lemma_map(df, "text")
     assert m["walked"] == "walk" and m["walking"] == "walk"
     assert m["walks"] == "walk"
     assert m["hoping"] == "hope" and m["hoped"] == "hope"
+    # 'hop' is attested too: CVC ordering still prefers the e-restored
+    # base for 'hoping', the doubled consonant picks 'hop' for 'hopping'
+    assert m["hopping"] == "hop"
     assert m["stopped"] == "stop" and m["stopping"] == "stop"
     assert m["studies"] == "study" and m["studied"] == "study"
+    assert m["boxes"] == "box"
     assert m["movies"] == "movie"
     assert m["singing"] == "sing"
+    assert m["untying"] == "untie"
+    # the ie-rule needs two letters before '-ying': 'dying' is left to the
+    # irregular dictionary
+    assert "dying" not in m
     assert "running" not in m  # base form not in corpus
     assert "gas" not in m  # 'ga' unattested → no junk strip
-    assert "walk" not in m  # bases never map
+    assert "walk" not in m and "hop" not in m  # bases never map
 
 
 def test_antbnc_scale_dict_defaults_to_broadcast(spark):
@@ -328,3 +338,66 @@ def test_q40_bc_lemma_arm_takes_broadcast_path_and_fires(spark, sf_dir):
         r["n_bc_lemmatized"] >= r["n_lemmatized"] + 4 for r in rows
     )
     assert len({r["bc_lemma_fp"] for r in rows}) > 1
+
+
+def test_vocabulary_order_ignores_partitioning(spark, sf_dir):
+    """CountVectorizer orders equal-count terms by how its input happens
+    to be partitioned; fit_document_vectors renumbers the vocabulary in
+    sorted term order, so the same docs at 1 and at 4 partitions give the
+    same vocabulary and bit-identical vectors."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    fits = [
+        fit_document_vectors(docs.repartition(n, "doc_id")) for n in (1, 4)
+    ]
+    (m1, v1), (m4, v4) = fits
+    assert m1.stages[2].vocabulary == m4.stages[2].vocabulary
+    assert m1.stages[2].vocabulary == sorted(m1.stages[2].vocabulary)
+    rows = [
+        dict(v.select("doc_id", "norm_features").collect()) for v in (v1, v4)
+    ]
+    assert rows[0] == rows[1]
+    for _, v in fits:
+        v.unpersist()
+
+
+def test_single_pass_fit_matches_pipeline_fit(spark, sf_dir):
+    """Differential: the single-pass fit equals the plain Pipeline.fit of
+    build_tfidf_pipeline renumbered to sorted term order, bit for bit —
+    vocabulary, IDF vector, and norm_features recomputed from the plain
+    fit's unnormalized TF-IDF with Normalizer's arithmetic (squares summed
+    in index order, then one division per value). The lemma map is the
+    corpus's induced one, as build_features uses it."""
+    import math
+
+    from movie_recommendation_etl_spark.ml.lemmas import induce_lemma_map
+    from movie_recommendation_etl_spark.ml.tfidf import build_tfidf_pipeline
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    lemma_map = induce_lemma_map(docs, "text")
+    lemma_map.update(load_default_lemmas())
+    ref = build_tfidf_pipeline("text", lemma_map=lemma_map).fit(docs)
+    model, vecs = fit_document_vectors(docs, "text", lemma_map=lemma_map)
+
+    ref_vocab = ref.stages[3].vocabulary
+    vocab = model.stages[3].vocabulary
+    assert vocab == sorted(ref_vocab)
+    to_new = {i: vocab.index(t) for i, t in enumerate(ref_vocab)}
+    ref_idf = ref.stages[4].idf.toArray()
+    new_idf = model.stages[4].idf.toArray()
+    assert [new_idf[to_new[i]] for i in range(len(ref_vocab))] == list(ref_idf)
+
+    got = dict(vecs.select("doc_id", "norm_features").collect())
+    ref_rows = ref.transform(docs).select("doc_id", "__tfidf_features")
+    for doc_id, tfidf in ref_rows.collect():
+        pairs = sorted(
+            (to_new[int(i)], float(x))
+            for i, x in zip(tfidf.indices, tfidf.values)
+        )
+        sq = 0.0
+        for _, x in pairs:
+            sq += x * x
+        norm = math.sqrt(sq)
+        want = [x / norm if norm else x for _, x in pairs]
+        assert list(got[doc_id].indices) == [j for j, _ in pairs]
+        assert list(got[doc_id].values) == want
+    vecs.unpersist()
