@@ -307,9 +307,6 @@ def batch_ann(
     *,
     top_k: int = 5,
     radius: float = 1.4,
-    widen: float = 2.0,
-    max_widen_rounds: int = 1,
-    exact_fallback: bool = True,
 ) -> DataFrame:
     """Many-query ANN as ONE distributed job: approxSimilarityJoin inside
     ``radius`` (on L2-normalized vectors dist=sqrt(2-2cos), so radius 1.4 ≈
@@ -319,12 +316,12 @@ def batch_ann(
 
     A fixed radius under-returns for queries in sparse neighborhoods (the
     r2 scale audit). Under-filled queries (< top_k neighbors) are re-run
-    through ``max_widen_rounds`` progressively wider joins (radius x
-    ``widen``), and — since approxSimilarityJoin can only ever see
-    bucket-colliding pairs regardless of radius — any STILL-under-filled
-    residual finishes with an exact brute-force pass. Each escalation
-    touches only the residual queries, so the common case stays one join
-    and the guarantee costs (residual x dataset), not (queries x dataset).
+    through one join at twice the radius, and — since approxSimilarityJoin
+    can only ever see bucket-colliding pairs regardless of radius — any
+    STILL-under-filled residual finishes with an exact brute-force pass.
+    Each escalation touches only the residual queries, so the common case
+    stays one join and the guarantee costs (residual x dataset), not
+    (queries x dataset).
 
     Each pass's top-k is materialized via localCheckpoint: it is O(queries
     x top_k) rows, and the under-fill check would otherwise re-run the
@@ -359,42 +356,36 @@ def batch_ann(
         ).unionByName(redo)
 
     result = topk(lsh_pass(queries, radius))
-    r = radius
-    for _ in range(max_widen_rounds):
-        under = residual(result)
-        if under.isEmpty():
-            return result
-        r *= widen
-        result = merge(result, topk(lsh_pass(under, r)))
-    if exact_fallback:
-        under = residual(result)
-        if not under.isEmpty():
-            feat = model.getInputCol()
-            qa = F.broadcast(
-                under.select(
-                    F.col(query_id_col).alias("query_id"),
-                    vector_to_array(feat).alias("__qa"),
-                )
+    under = residual(result)
+    if under.isEmpty():
+        return result
+    result = merge(result, topk(lsh_pass(under, radius * 2)))
+    under = residual(result)
+    if under.isEmpty():
+        return result
+    feat = model.getInputCol()
+    qa = F.broadcast(
+        under.select(
+            F.col(query_id_col).alias("query_id"),
+            vector_to_array(feat).alias("__qa"),
+        )
+    )
+    da = dataset.select(
+        F.col(id_col).alias("neighbor_id"),
+        vector_to_array(feat).alias("__da"),
+    )
+    exact = qa.crossJoin(da).select(
+        "query_id",
+        "neighbor_id",
+        F.sqrt(
+            F.aggregate(
+                F.zip_with("__qa", "__da", lambda x, y: (x - y) * (x - y)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
             )
-            da = dataset.select(
-                F.col(id_col).alias("neighbor_id"),
-                vector_to_array(feat).alias("__da"),
-            )
-            exact = qa.crossJoin(da).select(
-                "query_id",
-                "neighbor_id",
-                F.sqrt(
-                    F.aggregate(
-                        F.zip_with(
-                            "__qa", "__da", lambda x, y: (x - y) * (x - y)
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                ).alias("dist"),
-            )
-            result = merge(result, topk(exact))
-    return result
+        ).alias("dist"),
+    )
+    return merge(result, topk(exact))
 
 
 def embeddings_as_vectors(

@@ -116,7 +116,7 @@ def candidate_lemmas(tok: str) -> list[str]:
         out += [tok[:-1], tok[:-2]] if cvc else [tok[:-2], tok[:-1]]
     # -ing family, same shape
     if n >= 5 and tok.endswith("ing"):
-        if n >= 6 and tok.endswith("ying"):
+        if tok.endswith("ying"):
             out.append(tok[:-4] + "ie")
         if tok[-4] == tok[-5] and tok[-4] not in "aeiou":
             out.append(tok[:-4])

@@ -9,9 +9,10 @@ built-in stages (SURVEY.md §2.10 mapping M1-M10):
 - M1/M6 (document assembly/finishing) — not needed; columns stay columns.
 - M2 Tokenizer            → RegexTokenizer(pattern=\\W+, lowercase)
 - M3 Normalizer           → the tokenizer's lowercase + non-word splitting
-- M4 Lemmatizer           → optional broadcast-dictionary map (lemmatize());
-                            off by default because it changes the vocabulary
-                            and therefore every downstream golden (SURVEY §7)
+- M4 Lemmatizer           → BroadcastLemmatizer: a dictionary lookup per
+                            token through a broadcast dict (Arrow pandas_udf);
+                            runs when a lemma map is given, which
+                            pipeline.build_features always does
 - M5 StopWordsCleaner     → StopWordsRemover(caseSensitive=False)
 - M8 CountVectorizer      → CountVectorizer(minDF=3)
 - M9 IDF                  → IDF(minDocFreq=3)
@@ -20,9 +21,9 @@ built-in stages (SURVEY.md §2.10 mapping M1-M10):
 
 Scale notes: the fits are distributed aggregations (vocabulary/DF counts);
 the fitted vocabulary is collected once to the driver and broadcast into the
-transform closures — at 100 TB keep ``vocab_size`` bounded (the reference's
-implicit 2^18 default) so that broadcast stays ~tens of MiB (the reference's
-35.6 MiB task-binary warnings, SURVEY §4).
+transform closures — the vocabulary is capped at the reference's implicit
+2^18 default so that broadcast stays ~tens of MiB (the reference's 35.6 MiB
+task-binary warnings, SURVEY §4).
 """
 
 from __future__ import annotations
@@ -38,10 +39,12 @@ from pyspark.ml.feature import (
     CountVectorizerModel,
     Normalizer,
     RegexTokenizer,
-    SQLTransformer,
     StopWordsRemover,
 )
-from pyspark.sql import Column, DataFrame
+from pyspark.ml.param import Param, Params
+from pyspark.ml.param.shared import HasInputCol, HasOutputCol
+from pyspark.ml.util import DefaultParamsReadable, DefaultParamsWritable
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,63 +60,53 @@ def load_default_lemmas() -> dict[str, str]:
     return json.loads(_LEMMA_FIXTURE.read_text())
 
 
-def _lemma_stage(lemma_map: dict[str, str]) -> SQLTransformer:
-    """M4 as a real pipeline stage: a SQLTransformer whose statement maps
-    each token through a map literal (miss → token unchanged). Pure Catalyst
-    — the map is baked into the plan, no Python UDF, no shuffle — and it
-    serializes with the PipelineModel like any other stage. Placed between
-    tokenizer and stopword removal, the reference's annotator order
-    (transform/execute.py:184-218: Tokenizer → Normalizer → Lemmatizer →
-    StopWordsCleaner)."""
+class BroadcastLemmatizer(
+    Transformer,
+    HasInputCol,
+    HasOutputCol,
+    DefaultParamsReadable,
+    DefaultParamsWritable,
+):
+    """M4: every token maps through the lemma dictionary (miss → token
+    unchanged), the reference's AntBNC lookup (transform/execute.py:
+    198-202). The dict ships to executors once per SparkContext as a
+    broadcast variable and tokens map through it in an Arrow-batched
+    pandas_udf, so the plan stays O(1) in dictionary size, lookup is a
+    hash probe per token, and the stage runs in the scan stage (no
+    shuffle). The map is a Param, so the stage saves and loads with the
+    PipelineModel like any other."""
 
-    def q(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
-    entries = ", ".join(f"{q(k)}, {q(v)}" for k, v in sorted(lemma_map.items()))
-    stmt = (
-        "SELECT *, transform(__tokens, t -> "
-        f"coalesce(try_element_at(map({entries}), t), t)) AS __lemmas "
-        "FROM __THIS__"
+    lemmaMap = Param(
+        Params._dummy(),
+        "lemmaMap",
+        "inflected token -> lemma; tokens not in the map pass through",
+        typeConverter=dict,
     )
-    return SQLTransformer(statement=stmt)
-
-
-# Above this entry count the map-literal SQLTransformer is the wrong tool:
-# every (inflected, lemma) pair becomes a plan literal, so a real AntBNC-
-# sized dictionary (~hundreds of thousands of entries) blows up the SQL
-# statement string and the Catalyst plan tree. Large dicts switch to the
-# broadcast formulation below instead (SURVEY §2.10 M4 design).
-_LEMMA_LITERAL_MAX = 1024
-
-
-class BroadcastLemmatizer(Transformer):
-    """M4 for large dictionaries: the dict ships to executors ONCE as a
-    Spark broadcast variable, and tokens map through it in an Arrow-batched
-    pandas_udf — plan size stays O(1) in dictionary size, lookup is a hash
-    probe per token, and the stage is embarrassingly parallel in the scan
-    stage (no shuffle). This is the scale path for the reference's
-    pretrained AntBNC dictionary (transform/execute.py:198-202); dicts
-    under _LEMMA_LITERAL_MAX entries keep the pure-Catalyst map-literal
-    stage (_lemma_stage), which avoids the Python hop entirely.
-    """
 
     def __init__(
         self,
-        lemma_map: dict[str, str],
+        lemma_map: dict[str, str] | None = None,
         input_col: str = "__tokens",
         output_col: str = "__lemmas",
     ):
         super().__init__()
-        self._lemma_map = dict(lemma_map)
-        self._input_col = input_col
-        self._output_col = output_col
-        self._bc = None  # broadcast once per SparkContext, reused across calls
+        self._set(
+            lemmaMap=lemma_map or {}, inputCol=input_col, outputCol=output_col
+        )
+        # (map, broadcast) of the last transform: one broadcast per
+        # SparkContext and map, reused across calls
+        self._bc = None
 
     def _transform(self, dataset: DataFrame) -> DataFrame:
+        lemma_map = self.getOrDefault(self.lemmaMap)
         sc = dataset.sparkSession.sparkContext
-        if self._bc is None or self._bc._jbroadcast is None:
-            self._bc = sc.broadcast(self._lemma_map)
-        bc = self._bc
+        if (
+            self._bc is None
+            or self._bc[0] is not lemma_map
+            or self._bc[1]._jbroadcast is None
+        ):
+            self._bc = (lemma_map, sc.broadcast(lemma_map))
+        bc = self._bc[1]
 
         @F.pandas_udf(T.ArrayType(T.StringType()))
         def _lem(tokens: pd.Series) -> pd.Series:
@@ -125,7 +118,7 @@ class BroadcastLemmatizer(Transformer):
             )
 
         return dataset.withColumn(
-            self._output_col, _lem(F.col(self._input_col))
+            self.getOutputCol(), _lem(F.col(self.getInputCol()))
         )
 
 
@@ -135,24 +128,17 @@ def build_tfidf_pipeline(
     *,
     min_df: int = 3,
     min_doc_freq: int = 3,
-    vocab_size: int = 1 << 18,
     lemma_map: dict[str, str] | None = None,
-    lemma_literal_max: int = _LEMMA_LITERAL_MAX,
 ) -> Pipeline:
     """The core-Spark TF-IDF pipeline. Parameters default to the
     reference's (minDF=3 transform/execute.py:243, minDocFreq=3 :248,
     2^18 vocab cell-61 output, p=2.0 :253).
 
-    ``lemma_map`` enables the M4 lemmatization stage (reference
-    :198-202 runs AntBNC on every token). Default None: lemmatization
-    changes the vocabulary and therefore every downstream golden, so it is
-    opt-in; pass ``load_default_lemmas()`` for the shipped fixture.
-
-    Formulation auto-selects on dictionary size: up to
-    ``lemma_literal_max`` entries the map bakes into the plan as a Catalyst
-    literal (no Python hop); beyond that it ships as a broadcast variable
-    probed from an Arrow-batched pandas_udf (plan size stays O(1) however
-    large the dictionary — the AntBNC-scale path)."""
+    ``lemma_map`` adds the M4 BroadcastLemmatizer stage between tokenizer
+    and stopword removal, the reference's annotator order (:184-218:
+    Tokenizer → Normalizer → Lemmatizer → StopWordsCleaner; :198-202 runs
+    AntBNC on every token). Default None: no lemma stage; pass
+    ``load_default_lemmas()`` for the shipped fixture."""
     tokenizer = RegexTokenizer(
         inputCol=text_col,
         outputCol="__tokens",
@@ -162,10 +148,7 @@ def build_tfidf_pipeline(
     stages: list = [tokenizer]
     stop_input = "__tokens"
     if lemma_map:
-        if len(lemma_map) <= lemma_literal_max:
-            stages.append(_lemma_stage(lemma_map))
-        else:
-            stages.append(BroadcastLemmatizer(lemma_map))
+        stages.append(BroadcastLemmatizer(lemma_map))
         stop_input = "__lemmas"
     stopper = StopWordsRemover(
         inputCol=stop_input, outputCol="__clean_tokens", caseSensitive=False
@@ -174,7 +157,7 @@ def build_tfidf_pipeline(
         inputCol="__clean_tokens",
         outputCol="__raw_features",
         minDF=float(min_df),
-        vocabSize=vocab_size,
+        vocabSize=1 << 18,
     )
     idf = IDF(
         inputCol="__raw_features",
@@ -244,24 +227,3 @@ def _drop_intermediates(df: DataFrame) -> DataFrame:
         "__tfidf_features",
     )
 
-
-def lemmatize(tokens: Column, lemma_map: dict[str, str]) -> Column:
-    """M4 (optional): dictionary lemmatization as a Catalyst expression.
-
-    The reference loads the pretrained AntBNC dictionary (transform/
-    execute.py:198-202). Core Spark has no lemmatizer; for a bounded
-    dictionary the idiomatic formulation is a broadcast map baked into the
-    plan — here as a chain of element-level replacements via F.transform +
-    a map literal (try_element_at returns NULL for misses → coalesce keeps
-    the original token). No Python UDF, no shuffle.
-    """
-    if not lemma_map:
-        return tokens
-    pairs: list[Column] = []
-    for k, v in lemma_map.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.lit(v))
-    m = F.create_map(*pairs)
-    return F.transform(
-        tokens, lambda t: F.coalesce(F.try_element_at(m, t), t)
-    )

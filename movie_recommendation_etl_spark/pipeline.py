@@ -24,8 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from movie_recommendation_etl_spark.ml import lemmas
 from movie_recommendation_etl_spark.ml.ann import fit_lsh, recommend
-from movie_recommendation_etl_spark.ml.tfidf import fit_document_vectors
+from movie_recommendation_etl_spark.ml.tfidf import (
+    fit_document_vectors,
+    load_default_lemmas,
+)
 from movie_recommendation_etl_spark.operators.dedup import (
     asc_nulls_last,
     dedup_keep_first,
@@ -168,19 +172,16 @@ def combine_features(cleaned: DataFrame) -> DataFrame:
     )
 
 
-def build_features(
-    combined: DataFrame, *, min_df: int = 3, lemmatize: bool = True
-):
+def build_features(combined: DataFrame, *, min_df: int = 3):
     """TF-IDF + seeded LSH over the combined tag text. Returns
     (vectors_df cached, lsh_model).
 
-    M4 is ON by default, the reference's behavior (transform/execute.py:
-    198-202 lemmatizes every token with the pretrained AntBNC dictionary):
-    the dictionary here is the shipped irregular fixture unioned with
+    Every token is lemmatized, the reference's behavior (transform/
+    execute.py:198-202 runs the pretrained AntBNC dictionary): the
+    dictionary here is the shipped irregular fixture unioned with
     regular-morphology pairs induced from this corpus's own vocabulary
     (ml/lemmas.py — the two public ingredients of a published lemma list).
-    Irregulars win collisions. ``lemmatize=False`` restores the r6
-    vocabulary for callers pinned to it.
+    Irregulars win collisions.
 
     ``combined`` is read once: it stays persisted while the lemma
     induction and the TF-IDF fit read it, and is released (unless the
@@ -189,17 +190,8 @@ def build_features(
     if owned:
         combined = combined.persist()
     try:
-        lemma_map = None
-        if lemmatize:
-            from movie_recommendation_etl_spark.ml.lemmas import (
-                induce_lemma_map,
-            )
-            from movie_recommendation_etl_spark.ml.tfidf import (
-                load_default_lemmas,
-            )
-
-            lemma_map = induce_lemma_map(combined, "combined")
-            lemma_map.update(load_default_lemmas())
+        lemma_map = lemmas.induce_lemma_map(combined, "combined")
+        lemma_map.update(load_default_lemmas())
         _, vecs = fit_document_vectors(
             combined, text_col="combined", min_df=min_df, lemma_map=lemma_map
         )

@@ -164,7 +164,7 @@ def q61_knn_lsh_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only; the q44 pattern): the LSH candidate sets are engine-specific
     (seeded random projections), but three things are cross-engine facts —
 
-    - every query fills exactly top_k (the widening rounds + exact
+    - every query fills exactly top_k (the widened pass + exact
       residual fallback in batch_ann guarantee it structurally),
     - the exact top-1 cosine per query (computed here brute-force over the
       20-query slice, hash-exact vs the oracle — q60's arithmetic),

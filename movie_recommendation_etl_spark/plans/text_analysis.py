@@ -26,9 +26,7 @@ from movie_recommendation_etl_spark.functions.text import (
 )
 from movie_recommendation_etl_spark.ml.lemmas import expand_inflections
 from movie_recommendation_etl_spark.ml.tfidf import (
-    _LEMMA_LITERAL_MAX,
     BroadcastLemmatizer,
-    lemmatize,
     load_default_lemmas,
 )
 from movie_recommendation_etl_spark.operators.dedup import fingerprint
@@ -40,9 +38,8 @@ from movie_recommendation_etl_spark.sources.catalog import load_table
 # lexicon (ml/lemmas.py:expand_inflections — the same generator the
 # corpus-induction path uses forward) unioned with the shipped irregular
 # fixture, which wins on key conflicts (irregulars are a dictionary's job).
-# ~140 entries, well under ml/tfidf._LEMMA_LITERAL_MAX, so the REAL
-# map-literal Catalyst path (lemmatize()) is what executes — the same code
-# the TF-IDF pipeline's _lemma_stage bakes into its plan. The corpus is
+# ~140 entries, applied by ml/tfidf.BroadcastLemmatizer — the same stage
+# the TF-IDF pipeline runs on its induced map. The corpus is
 # all base forms, so the arm PLANTS hits: 8 inflected keys per doc chosen
 # by (doc_id*7 + j*13) % |keys| are appended to the token stream before
 # mapping — a corrupted lemma map (wrong value, missing key, broken
@@ -67,31 +64,6 @@ _SQL_LEMMA_KEYS = "[" + ", ".join(f"'{k}'" for k in _LEMMA_KEYS) + "]"
 _SQL_LEMMA_VALS = (
     "[" + ", ".join(f"'{_LEMMA_MAP[k]}'" for k in _LEMMA_KEYS) + "]"
 )
-
-# --- q40 broadcast-lemma arm (r11: the >_LEMMA_LITERAL_MAX path) -----------
-# The r10 lemma arm gates the map-literal Catalyst path only; a real
-# AntBNC-size dictionary (~27k-100k entries, reference
-# transform/execute.py:198-202) takes ml/tfidf.BroadcastLemmatizer — the
-# Arrow pandas_udf probing a Spark broadcast variable — which was
-# pytest-only. This arm pushes a generated dictionary past the literal
-# cutoff so THAT stage is what executes, under the same DuckDB hash gate:
-# the real ~140-entry map plus _BC_FILLER_N rule-generated filler entries
-# ("wug{i}ing" -> "wug{i}" — classic wug-test nonce words, guaranteed
-# disjoint from both the real map and the corpus vocabulary). Four filler
-# keys are PLANTED per doc alongside the 8 real planted keys, so the gate
-# proves (a) the broadcast dict fires on entries only the big dictionary
-# has, and (b) the real entries still map identically through the Arrow
-# path. The DuckDB oracle replays the real entries via the same literal
-# map and the filler family via its generating rule (strip 'ing', bounded
-# to the generated index range, no-leading-zero so a nonce token outside
-# the generated set can never false-match).
-_BC_FILLER_N = 1100
-_BC_LEMMA_MAP: dict[str, str] = {
-    **{f"wug{i}ing": f"wug{i}" for i in range(_BC_FILLER_N)},
-    **_LEMMA_MAP,
-}
-_BC_WUG_RE = "^wug(0|[1-9][0-9]*)ing$"
-
 
 @query(
     "q40_text_profile_suite",
@@ -126,48 +98,6 @@ _BC_WUG_RE = "^wug(0|[1-9][0-9]*)ing$"
                         i -> tt[i] <> lt[i])) AS INTEGER) AS n_lemmatized
         FROM lem2
     ),
-    blem AS (
-        -- broadcast arm's token stream: the lemma arm's tokens plus 4
-        -- planted filler keys that ONLY the >1024-entry dictionary holds
-        SELECT doc_id,
-               tt || list_transform(range(0, 4),
-                   j -> 'wug' || CAST(CAST((doc_id * 11 + j * 17)
-                            % {_BC_FILLER_N} AS BIGINT) AS VARCHAR) || 'ing')
-                   AS bt
-        FROM lem
-    ),
-    blem2 AS (
-        -- real entries via the literal map; filler entries via their
-        -- generating rule, bounded to the generated range and anchored
-        -- no-leading-zero so no other token can match
-        SELECT doc_id, bt,
-               list_transform(bt, tok ->
-                   coalesce(({_SQL_LEMMA_VALS})[
-                       list_position({_SQL_LEMMA_KEYS}, tok)],
-                       -- TRY_CAST, not CAST: regexp_extract returns ''
-                       -- on non-matching tokens and DuckDB does not
-                       -- guarantee AND short-circuit inside lambdas —
-                       -- a plain CAST('' AS BIGINT) aborts the whole
-                       -- query on corpora where the engine evaluates
-                       -- the right operand first (hit at sf0.1, r11).
-                       -- TRY_CAST yields NULL there; NULL < n is NULL,
-                       -- the WHEN is not taken, the token passes through
-                       CASE WHEN regexp_matches(tok, '{_BC_WUG_RE}')
-                                 AND TRY_CAST(regexp_extract(tok,
-                                     '{_BC_WUG_RE}', 1) AS BIGINT)
-                                     < {_BC_FILLER_N}
-                            THEN 'wug' || regexp_extract(tok,
-                                     '{_BC_WUG_RE}', 1)
-                            ELSE tok END)) AS bl
-        FROM blem
-    ),
-    blem3 AS (
-        SELECT doc_id,
-               md5(array_to_string(bl, ' ')) AS bc_lemma_fp,
-               CAST(len(list_filter(range(1, len(bt) + 1),
-                        i -> bt[i] <> bl[i])) AS INTEGER) AS n_bc_lemmatized
-        FROM blem2
-    ),
     m AS (
         SELECT doc_id, lang, text, toks,
                CAST(len(list_filter(toks, x -> x IN ({SQL_STOPWORDS})))
@@ -194,12 +124,9 @@ _BC_WUG_RE = "^wug(0|[1-9][0-9]*)ing$"
              / CAST(greatest(len(toks), 1) AS DOUBLE) AS type_token_ratio,
            round(ln(CAST(len(toks) AS DOUBLE) + 1.0), 9) AS log_n_tokens_q9,
            lemma_fp,
-           n_lemmatized,
-           bc_lemma_fp,
-           n_bc_lemmatized
+           n_lemmatized
     FROM m
     JOIN lem3 ON m.doc_id = lem3.doc_id
-    JOIN blem3 ON m.doc_id = blem3.doc_id
     """,
 )
 def q40_text_profile_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,22 +152,15 @@ def q40_text_profile_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     lives in tests/test_quality_model.py.
 
     r10: the M4 lemmatizer joins as the ``lemma_fp``/``n_lemmatized`` arm
-    — the REAL ≤1024-entry map-literal path (ml/tfidf.py:lemmatize, the
-    same construction _lemma_stage bakes into the TF-IDF pipeline)
-    applied to the doc tokens plus 8 planted inflected keys per doc, so
-    the dictionary provably fires and a corrupted lemma map or broken
-    morphology expansion (ml/lemmas.py) hash-fails instead of silently
-    reshaping the rows-only q70 flagship.
-
-    r11: the ``bc_lemma_fp``/``n_bc_lemmatized`` arm gates the OTHER M4
-    formulation — BroadcastLemmatizer, the Arrow pandas_udf + broadcast
-    dict stage an AntBNC-scale dictionary actually takes — by pushing a
-    generated dictionary past _LEMMA_LITERAL_MAX and planting 4 keys per
-    doc that exist only in the generated tail (see _BC_LEMMA_MAP). This
-    is the suite's one sanctioned Python hop: a single ArrowEvalPython
-    in the scan stage, no shuffle, which is precisely the plan shape
-    being locked in (tests/test_plan_shapes.py allows Arrow here and
-    nowhere else)."""
+    — the pipeline's own lemma stage (ml/tfidf.py:BroadcastLemmatizer,
+    the Arrow pandas_udf probing a broadcast dict) applied to the doc
+    tokens plus 8 planted inflected keys per doc, so the dictionary
+    provably fires and a corrupted lemma map or broken morphology
+    expansion (ml/lemmas.py) hash-fails instead of silently reshaping
+    the q70 flagship. This is the suite's one sanctioned Python hop: a
+    single ArrowEvalPython in the scan stage, no shuffle, which is
+    precisely the plan shape being locked in (tests/test_plan_shapes.py
+    allows Arrow here and nowhere else)."""
     docs = load_table(spark, sf_dir, "documents")
     # Two-step select so the tokenization and the O(tokens) distinct-count
     # evaluate ONCE each: CollapseProject keeps multi-referenced non-cheap
@@ -271,42 +191,9 @@ def q40_text_profile_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("__t").alias("__n"),
         F.size(F.array_distinct("__t")).alias("__u"),
         F.concat(F.col("__t"), planted).alias("__tt"),
-    ).select(
-        "doc_id",
-        "lang",
-        "text",
-        "__t",
-        "__n",
-        "__u",
-        "__tt",
-        # materialize the mapped stream once: the fp and the changed-count
-        # both consume it (map-literal HOFs re-evaluate per reference
-        # within a single projection)
-        lemmatize(F.col("__tt"), _LEMMA_MAP).alias("__lt"),
-        # broadcast arm's stream: the lemma arm's tokens plus 4 planted
-        # filler keys only the >_LEMMA_LITERAL_MAX dictionary holds
-        F.concat(
-            F.col("__tt"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(3)),
-                lambda j: F.concat(
-                    F.lit("wug"),
-                    F.pmod(
-                        F.col("doc_id") * 11 + j * 17, F.lit(_BC_FILLER_N)
-                    ).cast("string"),
-                    F.lit("ing"),
-                ),
-            ),
-        ).alias("__bt"),
     )
-    # The REAL large-dictionary stage (ml/tfidf.py:BroadcastLemmatizer —
-    # the Arrow pandas_udf probing a Spark broadcast variable), exactly
-    # what build_tfidf_pipeline selects past _LEMMA_LITERAL_MAX entries;
-    # the size assertion makes the arm fail loudly if the generated dict
-    # ever shrinks back into literal-map territory.
-    assert len(_BC_LEMMA_MAP) > _LEMMA_LITERAL_MAX
     mid = BroadcastLemmatizer(
-        _BC_LEMMA_MAP, input_col="__bt", output_col="__bl"
+        _LEMMA_MAP, input_col="__tt", output_col="__lt"
     ).transform(mid)
     toks = F.col("__t")
     safe_n = F.greatest(F.col("__n"), F.lit(1)).cast("double")
@@ -335,15 +222,6 @@ def q40_text_profile_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda x: x,
             )
         ).alias("n_lemmatized"),
-        F.md5(F.concat_ws(" ", F.col("__bl"))).alias("bc_lemma_fp"),
-        F.size(
-            F.filter(
-                F.zip_with(
-                    F.col("__bt"), F.col("__bl"), lambda a, b: a != b
-                ),
-                lambda x: x,
-            )
-        ).alias("n_bc_lemmatized"),
     )
 
 

@@ -81,9 +81,9 @@ def test_no_cartesian_products_anywhere(oracle_plans):
 def test_no_python_row_udfs_in_relational_plans(oracle_plans):
     """Row-at-a-time Python UDFs (BatchEvalPython) are banned everywhere.
     The Arrow-batched hop (ArrowEvalPython) is sanctioned in EXACTLY one
-    oracled plan: q40's broadcast-lemma arm, whose entire point is to
-    hash-gate the BroadcastLemmatizer pandas_udf path (r11) — any other
-    query growing an Arrow node means a built-in expression silently
+    oracled plan: q40's lemma arm, which hash-gates the
+    BroadcastLemmatizer pandas_udf stage the TF-IDF pipeline runs — any
+    other query growing an Arrow node means a built-in expression silently
     degraded to Python."""
     arrow_allowed = {"q40_text_profile_suite"}
     for name, plan in oracle_plans.items():

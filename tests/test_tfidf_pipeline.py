@@ -1,13 +1,11 @@
-"""TF-IDF pipeline unit tests: stage semantics + the optional broadcast-map
+"""TF-IDF pipeline unit tests: stage semantics + the broadcast-dictionary
 lemmatizer (SURVEY.md §2.10 M4 — the one truly custom operator)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from movie_recommendation_etl_spark.ml.tfidf import (
+    BroadcastLemmatizer,
     fit_document_vectors,
-    lemmatize,
     load_default_lemmas,
 )
 from movie_recommendation_etl_spark.sources.catalog import load_table
@@ -18,11 +16,14 @@ def test_lemmatize_broadcast_map(spark):
         [(["running", "dogs", "unknown", "ran"],)], "toks: array<string>"
     )
     lemmas = {"running": "run", "ran": "run", "dogs": "dog"}
-    out = df.select(lemmatize(F.col("toks"), lemmas).alias("lem")).collect()[0]
-    assert out["lem"] == ["run", "dog", "unknown", "run"]
+
+    def lem(m):
+        stage = BroadcastLemmatizer(m, input_col="toks", output_col="lem")
+        return stage.transform(df).collect()[0]["lem"]
+
+    assert lem(lemmas) == ["run", "dog", "unknown", "run"]
     # empty map is the identity
-    ident = df.select(lemmatize(F.col("toks"), {}).alias("lem")).collect()[0]
-    assert ident["lem"] == ["running", "dogs", "unknown", "ran"]
+    assert lem({}) == ["running", "dogs", "unknown", "ran"]
 
 
 def test_tfidf_vectors_are_l2_normalized(spark, sf_dir):
@@ -71,14 +72,10 @@ def test_lemma_pipeline_stage_changes_vocab_exactly(spark):
 def test_large_lemma_dict_broadcast_no_plan_blowup(spark):
     """An AntBNC-sized dictionary (reference transform/execute.py:198-202;
     hundreds of thousands of entries) must NOT bake into the plan as a map
-    literal — the pipeline auto-switches to the broadcast pandas_udf stage,
-    the plan stays O(1) in dict size, and the vocabulary golden is
-    unchanged from the small-fixture run."""
-    from movie_recommendation_etl_spark.ml.tfidf import (
-        BroadcastLemmatizer,
-        build_tfidf_pipeline,
-        load_default_lemmas,
-    )
+    literal — the broadcast pandas_udf stage keeps the plan O(1) in dict
+    size, and the vocabulary golden is unchanged from the small-fixture
+    run."""
+    from movie_recommendation_etl_spark.ml.tfidf import build_tfidf_pipeline
 
     big = {f"synthetictok{i}x": f"synthetictok{i}" for i in range(110_000)}
     big.update(load_default_lemmas())
@@ -96,7 +93,7 @@ def test_large_lemma_dict_broadcast_no_plan_blowup(spark):
     )
     model = pipe.fit(df)
     out = model.transform(df)
-    # same golden as the literal formulation: lemmatize THEN stop-remove
+    # same golden as the small fixture: lemmatize THEN stop-remove
     vocab = set(model.stages[3].vocabulary)
     assert vocab == {"run", "wolf", "fast", "home", "see"}
     # the dictionary must not appear in the plan: no synthetic entry
@@ -106,67 +103,47 @@ def test_large_lemma_dict_broadcast_no_plan_blowup(spark):
     assert len(plan) < 50_000
 
 
-def test_lemma_formulations_agree(spark):
-    """Literal-map and broadcast formulations are interchangeable: forcing
-    the broadcast stage onto the small fixture yields the identical fitted
-    vocabulary and token streams."""
-    from movie_recommendation_etl_spark.ml.tfidf import load_default_lemmas
-
-    lemmas = load_default_lemmas()
-    rows = [
-        (0, "running wolves ran faster"),
-        (1, "the wolves were running"),
-        (2, "she saw the wolves running home"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    lit_model, _ = fit_document_vectors(
-        df, min_df=1, min_doc_freq=0, lemma_map=lemmas
-    )
-    bc_model, _ = fit_document_vectors(
-        df, min_df=1, min_doc_freq=0, lemma_map=lemmas, lemma_literal_max=0
-    )
-    assert set(lit_model.stages[3].vocabulary) == set(
-        bc_model.stages[3].vocabulary
-    )
-    # CountVectorizer breaks equal-frequency ties arbitrarily between fits,
-    # so compare term->weight maps, not raw index-space vectors
-    def term_weights(model):
-        vocab = model.stages[3].vocabulary
-        return {
-            r["doc_id"]: {
-                vocab[int(i)]: round(float(w), 9)
-                for i, w in zip(
-                    r["norm_features"].indices, r["norm_features"].values
-                )
-            }
-            for r in model.transform(df)
-            .select("doc_id", "norm_features")
-            .collect()
-        }
-
-    assert term_weights(lit_model) == term_weights(bc_model)
-
-
-def test_lemma_pipeline_model_roundtrip(spark, tmp_path):
-    """The SQLTransformer lemma stage serializes with the PipelineModel —
-    a saved/reloaded model produces identical token streams."""
+def test_lemma_pipeline_model_roundtrip(spark, sf_dir, tmp_path):
+    """The lemma stage saves and loads with the PipelineModel at the
+    build's dictionary size (over a thousand entries, like every induced
+    map): a reloaded model reproduces norm_features bit for bit."""
     from pyspark.ml import PipelineModel
+    from pyspark.sql import functions as F
 
-    from movie_recommendation_etl_spark.ml.tfidf import build_tfidf_pipeline
+    from movie_recommendation_etl_spark.ml.lemmas import expand_inflections
 
-    df = spark.createDataFrame(
-        [(0, "running wolves ran"), (1, "wolves were running")],
-        "doc_id: long, text: string",
+    base = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    words = [
+        r[0]
+        for r in base.select(F.explode(F.split("text", " "))).distinct().collect()
+    ]
+    fillers = [
+        "stem" + "".join("abcdefghij"[int(d)] for d in f"{i:03d}")
+        for i in range(300)
+    ]
+    lemma_map = expand_inflections(words + fillers)
+    lemma_map.update(load_default_lemmas())
+    assert len(lemma_map) > 1024
+    # every word again in its -s form, for the lemma stage to map back
+    docs = base.select(
+        "doc_id",
+        F.concat_ws(
+            " ", "text", F.regexp_replace("text", r"(\w+)", "$1s")
+        ).alias("text"),
     )
-    model = build_tfidf_pipeline(
-        min_df=1, min_doc_freq=0, lemma_map={"running": "run", "wolves": "wolf"}
-    ).fit(df)
+    model, vecs = fit_document_vectors(docs, "text", lemma_map=lemma_map)
     path = str(tmp_path / "lemma_model")
     model.write().overwrite().save(path)
     back = PipelineModel.load(path)
-    a = model.transform(df).select("norm_features").collect()
-    b = back.transform(df).select("norm_features").collect()
-    assert [r["norm_features"] for r in a] == [r["norm_features"] for r in b]
+    lem = back.stages[1]
+    assert isinstance(lem, BroadcastLemmatizer)
+    assert lem.getOrDefault(lem.lemmaMap) == lemma_map
+    vocab = back.stages[3].vocabulary
+    assert "join" in vocab and "joins" not in vocab
+    a = dict(vecs.select("doc_id", "norm_features").collect())
+    b = dict(back.transform(docs).select("doc_id", "norm_features").collect())
+    assert a == b
+    vecs.unpersist()
 
 
 def test_expand_inflections_orthography():
@@ -220,9 +197,7 @@ def test_induce_lemma_map_vocabulary_filtered(spark):
     assert m["movies"] == "movie"
     assert m["singing"] == "sing"
     assert m["untying"] == "untie"
-    # the ie-rule needs two letters before '-ying': 'dying' is left to the
-    # irregular dictionary
-    assert "dying" not in m
+    assert m["dying"] == "die"
     assert "running" not in m  # base form not in corpus
     assert "gas" not in m  # 'ga' unattested → no junk strip
     assert "walk" not in m and "hop" not in m  # bases never map
@@ -230,15 +205,11 @@ def test_induce_lemma_map_vocabulary_filtered(spark):
 
 def test_antbnc_scale_dict_defaults_to_broadcast(spark):
     """The r6 M4 closure: a >=50k-entry dictionary — irregular fixture ∪
-    regular morphology expanded over a base lexicon — routes through
-    BroadcastLemmatizer by DEFAULT formulation selection (no override) and
-    lemmatizes both rule-regular and irregular forms correctly."""
+    regular morphology expanded over a base lexicon — runs through
+    BroadcastLemmatizer and lemmatizes both rule-regular and irregular
+    forms correctly."""
     from movie_recommendation_etl_spark.ml.lemmas import expand_inflections
-    from movie_recommendation_etl_spark.ml.tfidf import (
-        BroadcastLemmatizer,
-        build_tfidf_pipeline,
-        load_default_lemmas,
-    )
+    from movie_recommendation_etl_spark.ml.tfidf import build_tfidf_pipeline
 
     enc = lambda i: "stem" + "".join(  # noqa: E731
         "abcdefghij"[int(d)] for d in f"{i:05d}"
@@ -277,18 +248,17 @@ def test_min_df_prunes_rare_terms(spark):
 
 
 def test_q40_lemma_arm_map_is_safe_and_fires(spark, sf_dir):
-    """The q40 lemma arm's embedded dictionary must stay on the
-    map-literal path (<= _LEMMA_LITERAL_MAX entries), be SQL-literal-safe
+    """The q40 lemma arm's embedded dictionary must be SQL-literal-safe
     (lowercase alpha only — it is pasted into the DuckDB oracle), never
-    map a key to itself, and provably FIRE: every doc gets 8 planted
-    inflected keys, so n_lemmatized >= 8 everywhere."""
-    from movie_recommendation_etl_spark.ml.tfidf import _LEMMA_LITERAL_MAX
+    map a key to itself, and provably FIRE through BroadcastLemmatizer:
+    every doc gets 8 planted inflected keys, so n_lemmatized >= 8
+    everywhere."""
     from movie_recommendation_etl_spark.plans.registry import QUERIES
     from movie_recommendation_etl_spark.plans.text_analysis import (
         _LEMMA_MAP,
     )
 
-    assert 0 < len(_LEMMA_MAP) <= _LEMMA_LITERAL_MAX
+    assert _LEMMA_MAP
     for k, v in _LEMMA_MAP.items():
         assert k != v
         assert k.isalpha() and k.islower(), k
@@ -300,44 +270,6 @@ def test_q40_lemma_arm_map_is_safe_and_fires(spark, sf_dir):
     assert all(r["n_lemmatized"] >= 8 for r in rows)
     # the fp actually depends on the mapping: distinct docs, distinct fps
     assert len({r["lemma_fp"] for r in rows}) > 1
-
-
-def test_q40_bc_lemma_arm_takes_broadcast_path_and_fires(spark, sf_dir):
-    """The r11 broadcast arm's generated dictionary must (a) exceed the
-    literal cutoff so build_tfidf_pipeline would select BroadcastLemmatizer
-    for it — the arm and the pipeline provably share the selection
-    boundary — (b) keep the filler family disjoint from the real map, and
-    (c) FIRE on entries only the big dictionary holds: each doc plants 8
-    real + 4 filler keys, so n_bc_lemmatized >= n_lemmatized + 4."""
-    from movie_recommendation_etl_spark.ml.tfidf import (
-        _LEMMA_LITERAL_MAX,
-        BroadcastLemmatizer,
-        build_tfidf_pipeline,
-    )
-    from movie_recommendation_etl_spark.plans.registry import QUERIES
-    from movie_recommendation_etl_spark.plans.text_analysis import (
-        _BC_LEMMA_MAP,
-        _LEMMA_MAP,
-    )
-
-    assert len(_BC_LEMMA_MAP) > _LEMMA_LITERAL_MAX
-    # the real entries survive the union unchanged; fillers are disjoint
-    assert all(_BC_LEMMA_MAP[k] == v for k, v in _LEMMA_MAP.items())
-    fillers = set(_BC_LEMMA_MAP) - set(_LEMMA_MAP)
-    assert fillers and all(
-        k.startswith("wug") and k.endswith("ing") for k in fillers
-    )
-    # the pipeline's auto-selection puts THIS dict on the broadcast stage
-    stages = build_tfidf_pipeline(lemma_map=_BC_LEMMA_MAP).getStages()
-    assert any(isinstance(s, BroadcastLemmatizer) for s in stages)
-    rows = QUERIES["q40_text_profile_suite"](spark, sf_dir).select(
-        "n_lemmatized", "n_bc_lemmatized", "lemma_fp", "bc_lemma_fp"
-    ).collect()
-    assert rows
-    assert all(
-        r["n_bc_lemmatized"] >= r["n_lemmatized"] + 4 for r in rows
-    )
-    assert len({r["bc_lemma_fp"] for r in rows}) > 1
 
 
 def test_vocabulary_order_ignores_partitioning(spark, sf_dir):
