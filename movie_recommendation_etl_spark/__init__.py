@@ -13,7 +13,7 @@ Design rules (enforced throughout):
 - Built-in ``pyspark.sql.functions`` first; Arrow-batched pandas UDFs only where
   core Spark genuinely cannot express the semantics; row-at-a-time UDFs never.
 - Explicit schemas (no inferSchema double scans), broadcast small dims,
-  partition/bucket big fact tables, keep whole-stage codegen spans wide.
+  partition big fact tables, keep whole-stage codegen spans wide.
 """
 
 from movie_recommendation_etl_spark.session import get_spark  # noqa: F401

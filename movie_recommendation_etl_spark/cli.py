@@ -48,9 +48,7 @@ def _cmd_transform(args: argparse.Namespace) -> int:
     from movie_recommendation_etl_spark.session import get_spark
 
     spark = get_spark(app_name="mre-transform")
-    vecs = run_transform(
-        spark, args.in_csv, args.out_dir, min_df=args.min_df
-    )
+    vecs = run_transform(spark, args.in_csv, args.out_dir)
     print(f"vectors ready: {vecs.count()} rows -> {args.out_dir}")
     return 0
 
@@ -1777,7 +1775,6 @@ def build_parser() -> argparse.ArgumentParser:
     tr = sub.add_parser("transform", help="CSV -> clean -> TF-IDF -> LSH -> sinks")
     tr.add_argument("in_csv")
     tr.add_argument("out_dir")
-    tr.add_argument("--min-df", type=int, default=3)
     tr.set_defaults(fn=_cmd_transform)
 
     ld = sub.add_parser("load", help="staged parquet -> JDBC database")

@@ -51,10 +51,6 @@ def desc(col: Union[Column, str]) -> SortSpec:
     return SortSpec(col, descending=True)
 
 
-def desc_nulls_first(col: Union[Column, str]) -> SortSpec:
-    return SortSpec(col, descending=True, nulls_last=False)
-
-
 _INVERTIBLE_INT = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 

@@ -92,7 +92,7 @@ def load_movies_csv(spark: SparkSession, path: str) -> DataFrame:
     cast. Works identically on the 42-column original and a pre-projected
     14-column staging file; a missing header column fails analysis loudly
     instead of scrambling data."""
-    raw = read_csv_robust(spark, path, schema=None)
+    raw = read_csv_robust(spark, path)
     missing = [c for c in MOVIES_COLUMNS if c not in raw.columns]
     if missing:
         raise ValueError(
@@ -172,9 +172,9 @@ def combine_features(cleaned: DataFrame) -> DataFrame:
     )
 
 
-def build_features(combined: DataFrame, *, min_df: int = 3):
-    """TF-IDF + seeded LSH over the combined tag text. Returns
-    (vectors_df cached, lsh_model).
+def build_features(combined: DataFrame):
+    """TF-IDF (the reference's minDF=3) + seeded LSH over the combined tag
+    text. Returns (vectors_df cached, lsh_model).
 
     Every token is lemmatized, the reference's behavior (transform/
     execute.py:198-202 runs the pretrained AntBNC dictionary): the
@@ -193,7 +193,7 @@ def build_features(combined: DataFrame, *, min_df: int = 3):
         lemma_map = lemmas.induce_lemma_map(combined, "combined")
         lemma_map.update(load_default_lemmas())
         _, vecs = fit_document_vectors(
-            combined, text_col="combined", min_df=min_df, lemma_map=lemma_map
+            combined, text_col="combined", lemma_map=lemma_map
         )
     finally:
         if owned:
@@ -239,12 +239,10 @@ def get_recommendations(
     return [r["id"] for r in out.collect()]
 
 
-def run_transform(
-    spark: SparkSession, in_csv: str, out_dir: str, *, min_df: int = 3
-) -> DataFrame:
+def run_transform(spark: SparkSession, in_csv: str, out_dir: str) -> DataFrame:
     """The full transform stage, CSV → sinks. Returns the cached vectors
     frame for interactive recommend() use."""
     movies = load_movies_csv(spark, in_csv)
-    vecs, model = build_features(combine_features(clean(movies)), min_df=min_df)
+    vecs, model = build_features(combine_features(clean(movies)))
     save_outputs(vecs, model, out_dir)
     return vecs

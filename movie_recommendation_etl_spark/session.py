@@ -38,6 +38,13 @@ _BASE_CONF: dict[str, str] = {
 }
 
 
+# SparkContext copies spark.executorEnv.* into every Python worker's
+# environment; the workers otherwise see the package only when the driver's
+# working directory happens to be the one that contains it.
+_WORKER_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -62,28 +69,29 @@ def default_driver_memory() -> str:
 
 def get_spark(
     app_name: str = "movie_recommendation_etl_spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster pass the cluster master URL (or rely on spark-submit --master).
+    The master is ``$SPARK_MASTER``, else ``local[$SPARK_GRAFT_CPUS]``.
+    Python workers find the package through ``spark.executorEnv.PYTHONPATH``
+    (the directory that holds it, ahead of any value in ``extra_conf``), so
+    a driver started outside the repo can still run Python on executors.
     """
-    if master is None:
-        master = os.environ.get("SPARK_MASTER", f"local[{default_parallelism()}]")
+    master = os.environ.get("SPARK_MASTER", f"local[{default_parallelism()}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_BASE_CONF)
     # Only effective at JVM creation — a getOrCreate() against a live
     # session keeps its existing heap.
     conf["spark.driver.memory"] = default_driver_memory()
     # Seed value only — AQE coalesces to actual data volume at runtime.
-    conf["spark.sql.shuffle.partitions"] = str(
-        shuffle_partitions or max(default_parallelism(), 8)
-    )
+    conf["spark.sql.shuffle.partitions"] = str(max(default_parallelism(), 8))
     if extra_conf:
         conf.update(extra_conf)
+    inherited = conf.get(_WORKER_PYTHONPATH, "").split(os.pathsep)
+    conf[_WORKER_PYTHONPATH] = os.pathsep.join(
+        dict.fromkeys(p for p in [_PACKAGE_ROOT, *inherited] if p)
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

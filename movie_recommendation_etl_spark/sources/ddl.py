@@ -58,13 +58,3 @@ def create_table_ddl(
     ine = "IF NOT EXISTS " if if_not_exists else ""
     body = ",\n  ".join(cols)
     return f"CREATE TABLE {ine}{table} (\n  {body}\n)"
-
-
-def execute_ddl(connection, ddl: str) -> None:
-    """Run DDL on any DB-API connection (psycopg2 etc.) driver-side."""
-    cur = connection.cursor()
-    try:
-        cur.execute(ddl)
-        connection.commit()
-    finally:
-        cur.close()

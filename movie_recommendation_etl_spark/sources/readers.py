@@ -12,14 +12,10 @@ from pyspark.sql import types as T
 
 
 def read_csv_robust(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    *,
-    infer: bool = False,
-    multi_line: bool = True,
+    spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
-    """CSV scan with the reference's quoting dialect.
+    """CSV scan with the reference's quoting dialect; every column is a
+    string unless ``schema`` is given.
 
     multiLine=True makes the file non-splittable per record boundary — fine
     for quoted prose columns, but at scale prefer landing data as parquet
@@ -29,14 +25,12 @@ def read_csv_robust(
         spark.read.option("header", True)
         .option("quote", '"')
         .option("escape", '"')
-        .option("multiLine", multi_line)
+        .option("multiLine", True)
         .option("ignoreLeadingWhiteSpace", True)
         .option("ignoreTrailingWhiteSpace", True)
     )
     if schema is not None:
         reader = reader.schema(schema)
-    elif infer:
-        reader = reader.option("inferSchema", True)
     return reader.csv(path)
 
 

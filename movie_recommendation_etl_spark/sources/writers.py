@@ -819,7 +819,3 @@ def write_jdbc(
     if array_types is not None:
         writer = writer.option("createTableColumnTypes", array_types)
     writer.mode(mode).save()
-
-
-def read_parquet_back(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

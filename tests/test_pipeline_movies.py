@@ -165,7 +165,7 @@ def test_load_by_name_from_wide_csv(spark, movies_fixture, tmp_path):
 
 def test_end_to_end_recommend_and_sinks(spark, movies_fixture, tmp_path):
     feats = combine_features(clean(load_movies_csv(spark, movies_fixture)))
-    vecs, model = build_features(feats, min_df=3)
+    vecs, model = build_features(feats)
     out_dir = str(tmp_path / "out")
     save_outputs(vecs, model, out_dir)
 

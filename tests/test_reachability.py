@@ -28,7 +28,6 @@ ROOTS = (
 # may only shrink: an entry that becomes reachable or disappears fails below.
 PENDING_DELETION = {
     f"{PKG}.operators.multimodal",
-    f"{PKG}.sources.bucketed",
 }
 
 
