@@ -26,16 +26,20 @@ hash-join over bucketed candidates does).
 At the reference's bucket length 1.95 on unit vectors a projection lies
 in [-1, 1], so each table has only two buckets (-1 and 0) and the
 candidates are ≈100% of the corpus (0.99995 measured on the benchmark's
-7.7k-doc serve corpus): a request costs one pass over every stored
-nonzero. Measured on a 4-core VM over that corpus (TF-IDF, 41 nonzeros
-per doc) and over 4x and 16x copies of it: the index takes ≈810 bytes
-per doc in the driver (16 per nonzero, 112 for the 14 bucket values, the
-rest ids, row offsets and norms) and a request ≈7.5 ns per stored
-nonzero (2.6 ms at 7.7k docs, 39 ms at 123k). At the reference's 604k
-docs that is ≈490 MB of driver memory and ≈190 ms per request. On top
-of that, each request in flight allocates one float64 per stored nonzero
-(the per-term products, 8 B/nonzero) plus a few per-doc arrays: ≈200 MB
-per concurrent request at 604k docs.
+7.7k-doc serve corpus). The bucket test screens out almost nothing; a
+request is cheap because its distance screen accumulates dot products
+over the query terms' postings only, a term→(row, value) copy of the
+vectors held with the index. Its queries share common tokens, so a query
+touches ≈28.8k postings, 9% of the 319k stored nonzeros. Measured on a
+4-core VM over that corpus (TF-IDF, 41 nonzeros per doc) and over 4x and
+16x copies of it: the index takes ≈1.4 kB per doc in the driver (28 B
+per nonzero, 16 for the vectors and 12 for their postings; 112 B for
+the 14 bucket values; ≈95 B for the id→row map; the rest ids, row
+offsets and norms) and a request ≈23 ns per query posting (0.85 ms at
+7.7k docs, 10.6 ms at 123k). At the reference's 604k docs that is
+≈850 MB of driver memory and ≈50 ms per request. Each request in flight
+allocates ≈3.4 B per stored nonzero (the gathered postings and a few
+per-doc arrays): ≈1.1 MB here, ≈85 MB at 604k docs.
 """
 
 from __future__ import annotations
@@ -91,19 +95,26 @@ def prepare_index(
 
 
 class LshIndex:
-    """A saved LSH index held in the driver: the id column, the feature
-    vectors as CSR arrays (``indptr``/``indices``/``values``, dense rows
-    stored with every position) and the bucket values as an ``(n,
-    num_hash_tables)`` array. Built by ``sources.writers.load_ann_index``;
-    :func:`recommend` answers from it without Spark. Read-only after
-    construction, so concurrent requests are safe."""
+    """A saved LSH index held in the driver: the id column with an
+    id→row map, the feature vectors as CSR arrays (``indptr``/``indices``
+    /``values``, dense rows stored with every position), the same vectors
+    by term as postings (``p_ptr``/``p_rows``/``p_vals``) and the bucket
+    values as an ``(n, num_hash_tables)`` array. Built by
+    ``sources.writers.load_ann_index``; :func:`recommend` answers from it
+    without Spark. Read-only after construction, so concurrent requests
+    are safe."""
 
     def __init__(self, table, id_col: str, features_col: str):
         import pyarrow.compute as pc
 
         self.id_col, self.features_col = id_col, features_col
-        self.ids = np.asarray(table.column(id_col).to_pylist())
+        self.ids = table.column(id_col).to_numpy(zero_copy_only=False)
         n = len(self.ids)
+        # id -> row for the point lookup; built from the last row back,
+        # so a repeated id maps to its first row
+        self._row = dict(
+            zip(reversed(self.ids.tolist()), range(n - 1, -1, -1))
+        )
 
         # VectorUDT is struct<type, size, indices, values>; type 1 = dense
         vec = table.column(features_col)
@@ -112,17 +123,27 @@ class LshIndex:
         self.indptr = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(nnz, out=self.indptr[1:])
         self.values = pc.list_flatten(vals).to_numpy()
-        row = np.repeat(np.arange(n), nnz)
+        row = np.repeat(np.arange(n, dtype=np.int32), nnz)
         kind = pc.struct_field(vec, "type").to_numpy(zero_copy_only=False)
         sparse = (kind != 1)[row]
-        # intp: numpy gathers with native-width indices ~3x faster
         self.indices = np.arange(len(row)) - self.indptr[row]
         self.indices[sparse] = pc.list_flatten(
             pc.struct_field(vec, "indices")
         ).to_numpy()
         self.dim = int(self.indices.max()) + 1 if len(self.indices) else 0
         self.sq_norms = np.bincount(row, weights=self.values**2, minlength=n)
-        self._empty = nnz == 0
+
+        # postings (CSC): term t's (row, value) pairs are p_rows/p_vals
+        # [p_ptr[t]:p_ptr[t + 1]]. Their order within a term does not
+        # matter (a row has one pair per term), so the sort need not be
+        # stable, which makes it ~2x faster.
+        by_term = np.argsort(self.indices)
+        self.p_ptr = np.zeros(self.dim + 1, dtype=np.int64)
+        np.cumsum(
+            np.bincount(self.indices, minlength=self.dim), out=self.p_ptr[1:]
+        )
+        self.p_rows = row[by_term]
+        self.p_vals = self.values[by_term]
 
         # hashes: one size-1 dense vector per table
         hashes = table.column("hashes")
@@ -156,38 +177,37 @@ class LshIndex:
 
     def neighbors(self, query_id, top_k: int) -> list[tuple]:
         """(id, dist) of the top_k nearest single-probe candidates,
-        ordered by (dist, id), the query's own id excluded; [] when the id
-        is absent."""
-        is_query = self.ids == query_id
-        hit = np.flatnonzero(is_query)
-        if not len(hit) or top_k <= 0:
+        ordered by (dist, id), every row with the query's id excluded;
+        [] when the id is absent. A repeated id answers from its first
+        row."""
+        r = self._row.get(query_id)
+        if r is None or top_k <= 0:
             return []
-        r = hit[0]
         lo, hi = self.indptr[r], self.indptr[r + 1]
         qi, qv = self.indices[lo:hi], self.values[lo:hi]
         # single probe: same bucket as the query in at least one table
         cand = (self.hashes == self.hashes[r]).any(axis=1)
-        cand &= ~is_query
+        if len(self._row) < len(self.ids):  # some id is repeated
+            cand &= self.ids != query_id
+        else:
+            cand[r] = False
         rows = np.flatnonzero(cand)
         if len(rows) > top_k:
             # Screen with |x|^2 + |q|^2 - 2 x.q, which is off by a few ulp
             # of its terms, and keep every row within a wide slack of the
-            # k-th screened value; only those get the exact distance.
-            q = np.zeros(self.dim)
-            q[qi] = qv
+            # k-th screened value; only those get the exact distance. The
+            # dots accumulate over the query terms' postings only.
+            starts = self.p_ptr[qi]
+            lens = self.p_ptr[qi + 1] - starts
+            # positions of the query terms' postings, term after term
+            at = np.repeat(starts - np.cumsum(lens) + lens, lens)
+            at += np.arange(len(at))
+            dots = np.bincount(
+                self.p_rows[at],
+                weights=self.p_vals[at] * np.repeat(qv, lens),
+                minlength=len(self.ids),
+            )
             qn = float(qv @ qv)
-            # per-row dots by reduceat over the row offsets; the trailing
-            # 0.0 keeps every offset in range (a last row that is empty
-            # starts at nnz), and an empty row, whose slice reduceat reads
-            # as the next row's first product, is zeroed after it
-            prod = np.empty(len(self.values) + 1)
-            # indices < dim by construction; "clip" skips the copy that
-            # take's default "raise" makes when given out=
-            np.take(q, self.indices, out=prod[:-1], mode="clip")
-            prod[:-1] *= self.values
-            prod[-1] = 0.0
-            dots = np.add.reduceat(prod, self.indptr[:-1])
-            dots[self._empty] = 0.0
             approx = self.sq_norms[rows] + qn - 2.0 * dots[rows]
             kth = np.partition(approx, top_k - 1)[top_k - 1]
             rows = rows[approx <= kth + 1e-9 * (1.0 + qn + abs(kth))]
@@ -272,9 +292,13 @@ def _batch_lsh_pass(
     (query_id, neighbor_id, dist). Module-level so the plan-pin harness
     (scripts/pin_plans.py: batch_ann_pass1) captures EXACTLY the join the
     bench executes instead of a re-derived copy that could silently
-    diverge (r18 review)."""
+    diverge (r18 review).
+
+    The query batch is broadcast, so it must fit in a broadcast. Without
+    the hint the planner sizes an unfilled ``prepare_index`` cache from
+    its plan estimate and can broadcast the whole index instead."""
     return model.approxSimilarityJoin(
-        qs, dataset, radius, distCol="dist"
+        F.broadcast(qs), dataset, radius, distCol="dist"
     ).select(
         F.col(f"datasetA.{query_id_col}").alias("query_id"),
         F.col(f"datasetB.{id_col}").alias("neighbor_id"),
@@ -325,7 +349,8 @@ def batch_ann(
 
     Each pass's top-k is materialized via localCheckpoint: it is O(queries
     x top_k) rows, and the under-fill check would otherwise re-run the
-    similarity join once per escalation decision.
+    similarity join once per escalation decision. Every pass broadcasts
+    its queries, so the query batch must fit in a broadcast.
     """
     def topk(pairs: DataFrame) -> DataFrame:
         return _batch_topk(pairs, top_k).localCheckpoint(eager=True)

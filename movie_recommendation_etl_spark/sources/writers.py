@@ -701,15 +701,17 @@ def load_ann_index(
 ):
     """Load a save_ann_index() parquet (appended files included) into the
     driver as an ``ml.ann.LshIndex``: the id column, the features as CSR
-    arrays and the stored LSH bucket values. The files are read once with
+    arrays and as per-term postings, and the stored LSH bucket values. The
+    files are read once with
     pyarrow; no Spark job runs and nothing is cached in the JVM
     (``spark`` is unused, kept for the loader signature). ml.ann.recommend
-    then answers each request in this process with one pass over the
-    stored nonzeros. Measured: ≈810 bytes of driver memory per doc and
-    ≈7.5 ns per stored nonzero per request, i.e. ≈490 MB and ≈190 ms per
-    request at the reference's 604k docs (the ml.ann module docstring has
-    the breakdown). Each request in flight also allocates ≈8 bytes per
-    stored nonzero (≈200 MB at 604k docs), so size the driver for the
+    then answers each request in this process, touching only the
+    postings of the query's terms. Measured: ≈1.4 kB of driver memory per
+    doc (≈28 B per stored nonzero, 12 of them for the postings) and ≈23 ns
+    per query posting per request, i.e. ≈850 MB and ≈50 ms per request at
+    the reference's 604k docs (the ml.ann module docstring has the
+    breakdown). Each request in flight also allocates ≈3.4 bytes per
+    stored nonzero (≈85 MB at 604k docs), so size the driver for the
     number of concurrent requests too. For a corpus past what the driver
     holds, pass the prepare_index() frame to recommend instead.
 

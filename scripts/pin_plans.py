@@ -121,11 +121,9 @@ def main() -> int:
         docs = load_table(spark, sf_dir, "documents")
         _, vecs = fit_document_vectors(docs)
         lsh = fit_lsh(vecs)
+        # left unfilled: the query batch's broadcast hint, not the cache's
+        # statistics, must pick the join's build side
         index = prepare_index(lsh, vecs)
-        # prepare_index does not force its cache; build fills it by writing
-        # the index (save_ann_index) before batch_ann plans the join, and
-        # the join's build side follows the filled cache's statistics
-        index.count()
         q_batch = vecs.filter("doc_id % 37 = 0")
         return _batch_topk(
             _batch_lsh_pass(

@@ -552,3 +552,40 @@ def test_batch_ann_fills_underreturned_queries(spark, sf_dir):
     for r in QUERIES["q60_knn_bruteforce"](spark, sf_dir).collect():
         exact.setdefault(r["query_id"], set()).add(r["neighbor_id"])
     assert by_q == exact
+
+
+def test_batch_ann_broadcasts_queries_on_unfilled_index(spark):
+    """batch_ann's LSH join broadcasts the query batch even when the index
+    is a prepare_index frame that no action has filled yet. Without the
+    hint the planner sizes the unfilled cache from its plan estimate and
+    broadcasts the whole index instead (BuildRight)."""
+    from pyspark.ml.linalg import SparseVector
+
+    from movie_recommendation_etl_spark.ml.ann import (
+        _batch_lsh_pass,
+        prepare_index,
+    )
+
+    rng = np.random.default_rng(0)
+    rows = []
+    for i in range(40):
+        v = rng.uniform(0.1, 1.0, 5)
+        v /= np.linalg.norm(v)
+        terms = sorted(rng.choice(50, 5, replace=False).tolist())
+        rows.append((i, SparseVector(50, terms, v.tolist())))
+    vecs = spark.createDataFrame(rows, ["id", "norm_features"]).cache()
+    vecs.count()
+    index = None
+    try:
+        model = fit_lsh(vecs)
+        index = prepare_index(model, vecs)
+        pairs = _batch_lsh_pass(
+            model, vecs.filter("id % 7 = 0"), index, "id", "id", radius=1.4
+        )
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        joins = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
+        assert len(joins) == 1 and "BuildLeft" in joins[0], plan
+    finally:
+        vecs.unpersist()
+        if index is not None:
+            index.unpersist()
