@@ -32,14 +32,18 @@ over the query terms' postings only, a term→(row, value) copy of the
 vectors held with the index. Its queries share common tokens, so a query
 touches ≈28.8k postings, 9% of the 319k stored nonzeros. Measured on a
 4-core VM over that corpus (TF-IDF, 41 nonzeros per doc) and over 4x and
-16x copies of it: the index takes ≈1.4 kB per doc in the driver (28 B
-per nonzero, 16 for the vectors and 12 for their postings; 112 B for
-the 14 bucket values; ≈95 B for the id→row map; the rest ids, row
-offsets and norms) and a request ≈23 ns per query posting (0.85 ms at
-7.7k docs, 10.6 ms at 123k). At the reference's 604k docs that is
-≈850 MB of driver memory and ≈50 ms per request. Each request in flight
-allocates ≈3.4 B per stored nonzero (the gathered postings and a few
-per-doc arrays): ≈1.1 MB here, ≈85 MB at 604k docs.
+16x copies of it: the index takes ≈1.3 kB per doc in the driver (≈31 B
+per nonzero: 16 for the vectors, 12 for their postings, the rest the 14
+bucket values, ids, row offsets and norms) and a request ≈23 ns per
+query posting (0.75 ms at 7.7k docs, 2.5 ms at 31k, 10.7 ms at 123k).
+Loading (parquet read plus construction) takes 57 ms, 0.31 s and 1.6 s
+at those sizes; the postings' argsort makes construction grow faster
+than the corpus (35 ms, 0.21 s, 1.15 s, against 12 ms, 0.06 s, 0.31 s
+without postings). At the reference's 604k docs that is ≈780 MB of
+driver memory, ≈50 ms per request and, extrapolated, several seconds of
+load. Each request in flight allocates ≈3.4 B per stored nonzero (the
+gathered postings and a few per-doc arrays): ≈1.1 MB here, ≈85 MB at
+604k docs.
 """
 
 from __future__ import annotations
@@ -95,14 +99,13 @@ def prepare_index(
 
 
 class LshIndex:
-    """A saved LSH index held in the driver: the id column with an
-    id→row map, the feature vectors as CSR arrays (``indptr``/``indices``
-    /``values``, dense rows stored with every position), the same vectors
-    by term as postings (``p_ptr``/``p_rows``/``p_vals``) and the bucket
-    values as an ``(n, num_hash_tables)`` array. Built by
-    ``sources.writers.load_ann_index``; :func:`recommend` answers from it
-    without Spark. Read-only after construction, so concurrent requests
-    are safe."""
+    """A saved LSH index held in the driver: the id column, the feature
+    vectors as CSR arrays (``indptr``/``indices``/``values``, dense rows
+    stored with every position), the same vectors by term as postings
+    (``p_ptr``/``p_rows``/``p_vals``) and the bucket values as an ``(n,
+    num_hash_tables)`` array. Built by ``sources.writers.load_ann_index``;
+    :func:`recommend` answers from it without Spark. Read-only after
+    construction, so concurrent requests are safe."""
 
     def __init__(self, table, id_col: str, features_col: str):
         import pyarrow.compute as pc
@@ -110,11 +113,6 @@ class LshIndex:
         self.id_col, self.features_col = id_col, features_col
         self.ids = table.column(id_col).to_numpy(zero_copy_only=False)
         n = len(self.ids)
-        # id -> row for the point lookup; built from the last row back,
-        # so a repeated id maps to its first row
-        self._row = dict(
-            zip(reversed(self.ids.tolist()), range(n - 1, -1, -1))
-        )
 
         # VectorUDT is struct<type, size, indices, values>; type 1 = dense
         vec = table.column(features_col)
@@ -180,17 +178,16 @@ class LshIndex:
         ordered by (dist, id), every row with the query's id excluded;
         [] when the id is absent. A repeated id answers from its first
         row."""
-        r = self._row.get(query_id)
-        if r is None or top_k <= 0:
+        is_query = self.ids == query_id
+        hit = np.flatnonzero(is_query)
+        if not len(hit) or top_k <= 0:
             return []
+        r = hit[0]
         lo, hi = self.indptr[r], self.indptr[r + 1]
         qi, qv = self.indices[lo:hi], self.values[lo:hi]
         # single probe: same bucket as the query in at least one table
         cand = (self.hashes == self.hashes[r]).any(axis=1)
-        if len(self._row) < len(self.ids):  # some id is repeated
-            cand &= self.ids != query_id
-        else:
-            cand[r] = False
+        cand &= ~is_query
         rows = np.flatnonzero(cand)
         if len(rows) > top_k:
             # Screen with |x|^2 + |q|^2 - 2 x.q, which is off by a few ulp
@@ -334,9 +331,12 @@ def batch_ann(
 ) -> DataFrame:
     """Many-query ANN as ONE distributed job: approxSimilarityJoin inside
     ``radius`` (on L2-normalized vectors dist=sqrt(2-2cos), so radius 1.4 ≈
-    cos >= 0.02), then window top-k per query. This is the 100 TB shape —
-    the per-query approxNearestNeighbors loop in the reference runs a full
-    scan per query from the driver.
+    cos >= 0.02), then window top-k per query, where the reference's
+    per-query approxNearestNeighbors loop runs a full scan per query from
+    the driver. The corpus side scales with the cluster; the query side
+    is broadcast (see the last paragraph), so a many-query batch over a
+    large corpus has to be split into chunks that each fit in a
+    broadcast.
 
     A fixed radius under-returns for queries in sparse neighborhoods (the
     r2 scale audit). Under-filled queries (< top_k neighbors) are re-run

@@ -702,18 +702,21 @@ def load_ann_index(
     """Load a save_ann_index() parquet (appended files included) into the
     driver as an ``ml.ann.LshIndex``: the id column, the features as CSR
     arrays and as per-term postings, and the stored LSH bucket values. The
-    files are read once with
-    pyarrow; no Spark job runs and nothing is cached in the JVM
-    (``spark`` is unused, kept for the loader signature). ml.ann.recommend
-    then answers each request in this process, touching only the
-    postings of the query's terms. Measured: ≈1.4 kB of driver memory per
-    doc (≈28 B per stored nonzero, 12 of them for the postings) and ≈23 ns
-    per query posting per request, i.e. ≈850 MB and ≈50 ms per request at
-    the reference's 604k docs (the ml.ann module docstring has the
-    breakdown). Each request in flight also allocates ≈3.4 bytes per
-    stored nonzero (≈85 MB at 604k docs), so size the driver for the
-    number of concurrent requests too. For a corpus past what the driver
-    holds, pass the prepare_index() frame to recommend instead.
+    files are read once with pyarrow; no Spark job runs and nothing is
+    cached in the JVM (``spark`` is unused, kept for the loader
+    signature). ml.ann.recommend then answers each request in this
+    process, touching only the postings of the query's terms. Measured:
+    ≈1.3 kB of driver memory per doc (≈31 B per stored nonzero, 12 of
+    them for the postings) and ≈23 ns per query posting per request,
+    i.e. ≈780 MB and ≈50 ms per request at the reference's 604k docs (the
+    ml.ann module docstring has the breakdown). The load itself grows
+    faster than the corpus, because building the postings sorts every
+    nonzero: 57 ms at 7.7k docs, 0.31 s at 4x that and 1.6 s at 16x
+    (123k docs), so expect several seconds at 604k docs before the first
+    request. Each request in flight also allocates ≈3.4 bytes per stored
+    nonzero (≈85 MB at 604k docs), so size the driver for the number of
+    concurrent requests too. For a corpus past what the driver holds,
+    pass the prepare_index() frame to recommend instead.
 
     Raises ValueError when the parquet lacks ``id_col``, ``features_col``
     or ``hashes`` (an index saved without prepare_index has no hashes)."""
