@@ -36,14 +36,15 @@ touches ≈28.8k postings, 9% of the 319k stored nonzeros. Measured on a
 per nonzero: 16 for the vectors, 12 for their postings, the rest the 14
 bucket values, ids, row offsets and norms) and a request ≈23 ns per
 query posting (0.75 ms at 7.7k docs, 2.5 ms at 31k, 10.7 ms at 123k).
-Loading (parquet read plus construction) takes 57 ms, 0.31 s and 1.6 s
-at those sizes; the postings' argsort makes construction grow faster
-than the corpus (35 ms, 0.21 s, 1.15 s, against 12 ms, 0.06 s, 0.31 s
-without postings). At the reference's 604k docs that is ≈780 MB of
-driver memory, ≈50 ms per request and, extrapolated, several seconds of
-load. Each request in flight allocates ≈3.4 B per stored nonzero (the
-gathered postings and a few per-doc arrays): ≈1.1 MB here, ≈85 MB at
-604k docs.
+Loading (parquet read plus construction) takes ≈36 ms, 0.15 s and
+0.75 s at those sizes, construction alone 23 ms, 0.09 s and 0.48 s
+(against 12 ms, 0.06 s and 0.31 s without postings): the postings are
+sorted by term with two stable radix passes over 16-bit digits, linear
+in the nonzeros, and what still grows faster than the corpus is the
+gathers' cache misses. At the reference's 604k docs that is ≈780 MB of
+driver memory, ≈50 ms per request and, extrapolated, ≈4–5 s of load.
+Each request in flight allocates ≈3.4 B per stored nonzero (the gathered
+postings and a few per-doc arrays): ≈1.1 MB here, ≈85 MB at 604k docs.
 """
 
 from __future__ import annotations
@@ -132,10 +133,13 @@ class LshIndex:
         self.sq_norms = np.bincount(row, weights=self.values**2, minlength=n)
 
         # postings (CSC): term t's (row, value) pairs are p_rows/p_vals
-        # [p_ptr[t]:p_ptr[t + 1]]. Their order within a term does not
-        # matter (a row has one pair per term), so the sort need not be
-        # stable, which makes it ~2x faster.
-        by_term = np.argsort(self.indices)
+        # [p_ptr[t]:p_ptr[t + 1]], in row order. Sorted by term with two
+        # stable radix passes over 16-bit digits, low then high: numpy
+        # radix-sorts 16-bit keys, which is linear where an int64 argsort
+        # is not.
+        by_term = np.argsort(self.indices.astype(np.uint16), kind="stable")
+        high = (self.indices >> 16).astype(np.uint16)
+        by_term = by_term[np.argsort(high[by_term], kind="stable")]
         self.p_ptr = np.zeros(self.dim + 1, dtype=np.int64)
         np.cumsum(
             np.bincount(self.indices, minlength=self.dim), out=self.p_ptr[1:]

@@ -20,16 +20,18 @@ lemmatizer actually needs:
    irregular fixture (ml/lemmas_en_small.json), exactly the split a
    published lemma list encodes.
 
-Scale shape: induction is one aggregation (tokenize and count, one
-shuffle on token) whose distinct-token counts are collected to the driver;
-the reverse rules then run in Python over those distinct tokens. So it
-reads the corpus once, and the driver holds one (token, count) pair per
-distinct token: ≈15k for the 2k-row benchmark corpus, ≈28k for the
-12k-row serve corpus, ≈100 B each in the driver's dict (more while the
-collected rows are alive). A million-token vocabulary costs ≈100 MB, the
-same driver-resident bound the reference accepts by broadcasting AntBNC
-into its transform closures (SURVEY §4 broadcast row). The map returned
-is bounded by ``max_entries``.
+Scale shape: induction is one aggregation (count the tokens, one shuffle
+on token) whose distinct-token counts are collected to the driver; the
+reverse rules then run in Python over those distinct tokens. It counts
+the token frame the TF-IDF fit has already persisted
+(ml/tfidf.py:fit_document_vectors), so the text is split once for both.
+The driver holds one (token, count) pair per distinct token: ≈15k for
+the 2k-row benchmark corpus, ≈28k for the 12k-row serve corpus, ≈100 B
+each in the driver's dict (more while the collected rows are alive). A
+million-token vocabulary costs ≈100 MB, the same driver-resident bound
+the reference accepts by broadcasting AntBNC into its transform closures
+(SURVEY §4 broadcast row). The map returned is bounded by
+``max_entries``.
 """
 
 from __future__ import annotations
@@ -128,24 +130,23 @@ def candidate_lemmas(tok: str) -> list[str]:
 
 def induce_lemma_map(
     docs: DataFrame,
-    text_col: str = "text",
+    tokens_col: str = "__tokens",
     *,
     min_count: int = 1,
     max_entries: int = 500_000,
 ) -> dict[str, str]:
     """Corpus-driven lemma induction: {inflected: lemma} for every
     vocabulary token whose best rule-derived candidate is itself an
-    attested vocabulary word (count >= ``min_count``). Tokenization
-    matches the TF-IDF pipeline's RegexTokenizer (lowercase, split on
-    \\W+), so induced keys align with the tokens the lemma stage will see.
+    attested vocabulary word (count >= ``min_count``). ``tokens_col`` is
+    an array of tokens, in the TF-IDF pipeline the RegexTokenizer's
+    output (lowercase, split on \\W+), so induced keys are the tokens the
+    lemma stage will see.
 
-    One distributed aggregation (tokenize→count, one shuffle on token)
+    One distributed aggregation (token→count, one shuffle on token)
     collected to the driver, where the reverse rules run over the
     distinct tokens; at most ``max_entries`` entries, in token order."""
     counts = dict(
-        docs.select(
-            F.explode(F.split(F.lower(F.col(text_col)), r"\W+")).alias("tok")
-        )
+        docs.select(F.explode(tokens_col).alias("tok"))
         .filter(F.col("tok").rlike("^[a-z]{2,}$"))
         .groupBy("tok")
         .count()

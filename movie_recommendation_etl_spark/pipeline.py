@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from movie_recommendation_etl_spark.ml import lemmas
 from movie_recommendation_etl_spark.ml.ann import fit_lsh, recommend
 from movie_recommendation_etl_spark.ml.tfidf import (
     fit_document_vectors,
@@ -178,28 +177,19 @@ def build_features(combined: DataFrame):
 
     Every token is lemmatized, the reference's behavior (transform/
     execute.py:198-202 runs the pretrained AntBNC dictionary): the
-    dictionary here is the shipped irregular fixture unioned with
+    dictionary here is the shipped irregular fixture unioned over
     regular-morphology pairs induced from this corpus's own vocabulary
     (ml/lemmas.py — the two public ingredients of a published lemma list).
     Irregulars win collisions.
 
-    ``combined`` is read once: it stays persisted while the lemma
-    induction and the TF-IDF fit read it, and is released (unless the
-    caller had cached it) once the vectors are materialized."""
-    owned = not combined.is_cached
-    if owned:
-        combined = combined.persist()
-    try:
-        lemma_map = lemmas.induce_lemma_map(combined, "combined")
-        lemma_map.update(load_default_lemmas())
-        _, vecs = fit_document_vectors(
-            combined, text_col="combined", lemma_map=lemma_map
-        )
-    finally:
-        if owned:
-            combined.unpersist()
-    model = fit_lsh(vecs)
-    return vecs, model
+    ``combined`` is read once: fit_document_vectors tokenizes it into a
+    persisted frame that the lemma induction and the lemma and stop-word
+    stages read, and one term-statistics aggregation over their output
+    fits the vocabulary and IDF weights (ml/tfidf.py)."""
+    _, vecs = fit_document_vectors(
+        combined, text_col="combined", lemma_map=load_default_lemmas()
+    )
+    return vecs, fit_lsh(vecs)
 
 
 def save_outputs(vecs: DataFrame, model, out_dir: str) -> None:

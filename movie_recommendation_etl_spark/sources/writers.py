@@ -710,12 +710,12 @@ def load_ann_index(
     them for the postings) and ≈23 ns per query posting per request,
     i.e. ≈780 MB and ≈50 ms per request at the reference's 604k docs (the
     ml.ann module docstring has the breakdown). The load itself grows
-    faster than the corpus, because building the postings sorts every
-    nonzero: 57 ms at 7.7k docs, 0.31 s at 4x that and 1.6 s at 16x
-    (123k docs), so expect several seconds at 604k docs before the first
-    request. Each request in flight also allocates ≈3.4 bytes per stored
-    nonzero (≈85 MB at 604k docs), so size the driver for the number of
-    concurrent requests too. For a corpus past what the driver holds,
+    somewhat faster than the corpus, because building the postings sorts
+    every nonzero by term: ≈36 ms at 7.7k docs, 0.15 s at 4x that and
+    0.75 s at 16x (123k docs), so expect ≈4–5 s at 604k docs before the
+    first request. Each request in flight also allocates ≈3.4 bytes per
+    stored nonzero (≈85 MB at 604k docs), so size the driver for the
+    number of concurrent requests too. For a corpus past what the driver holds,
     pass the prepare_index() frame to recommend instead.
 
     Raises ValueError when the parquet lacks ``id_col``, ``features_col``

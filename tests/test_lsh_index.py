@@ -87,6 +87,33 @@ def brute_force(index: LshIndex, ids, hashes, q, top_k) -> list[tuple]:
     return [(i, d) for d, i in found[:top_k]]
 
 
+def assert_postings_by_term_in_row_order(index: LshIndex) -> None:
+    """The postings hold exactly the CSR's (term, row, value) triples, and
+    each term's rows ascend."""
+    rows = np.repeat(np.arange(len(index)), np.diff(index.indptr))
+    csr = sorted(
+        zip(index.indices.tolist(), rows.tolist(), index.values.tolist())
+    )
+    by_term = []
+    for t in np.flatnonzero(np.diff(index.p_ptr)).tolist():
+        lo, hi = index.p_ptr[t], index.p_ptr[t + 1]
+        assert np.all(np.diff(index.p_rows[lo:hi]) > 0), t
+        by_term += [(t, r, v) for r, v in zip(
+            index.p_rows[lo:hi].tolist(), index.p_vals[lo:hi].tolist()
+        )]
+    assert by_term == csr
+
+
+def test_postings_past_16_bit_terms():
+    """Term indices on both sides of 2^16 take both radix digits."""
+    rows = [{0: 1.0, 70_000: 2.0}, {5: 3.0, 65_536: 4.0, 70_000: 5.0}, {},
+            {65_535: 6.0, 65_536: 7.0}, {70_000: 8.0}]
+    vecs = [{**sparse(r), "size": 70_001} for r in rows]
+    index = build(list(range(len(rows))), vecs, [[0] * TABLES] * len(rows))
+    assert index.dim == 70_001
+    assert_postings_by_term_in_row_order(index)
+
+
 def test_postings_screen_matches_brute_force():
     ids, vecs = corpus()
     rng = np.random.default_rng(5)
@@ -98,6 +125,7 @@ def test_postings_screen_matches_brute_force():
     hashes[second] = hashes[first]
     index = build(ids, vecs, hashes)
     assert index.dim == DIM and len(index) == len(ids)
+    assert_postings_by_term_in_row_order(index)
 
     absent = 999
     for q in [*dict.fromkeys(ids), absent]:

@@ -137,7 +137,10 @@ def test_lemma_pipeline_model_roundtrip(spark, sf_dir, tmp_path):
     back = PipelineModel.load(path)
     lem = back.stages[1]
     assert isinstance(lem, BroadcastLemmatizer)
-    assert lem.getOrDefault(lem.lemmaMap) == lemma_map
+    # the given map unioned over the one induced from the corpus
+    saved = lem.getOrDefault(lem.lemmaMap)
+    assert saved == model.stages[1].getOrDefault("lemmaMap")
+    assert lemma_map.items() <= saved.items()
     vocab = back.stages[3].vocabulary
     assert "join" in vocab and "joins" not in vocab
     a = dict(vecs.select("doc_id", "norm_features").collect())
@@ -174,6 +177,8 @@ def test_induce_lemma_map_vocabulary_filtered(spark):
     rule candidate is itself attested in the corpus — 'walking'→'walk'
     needs 'walk' present; CVC ordering restores 'hoping'→'hope'; junk
     strips never materialize because their targets don't exist."""
+    from pyspark.sql import functions as F
+
     from movie_recommendation_etl_spark.ml.lemmas import induce_lemma_map
 
     rows = [
@@ -184,7 +189,7 @@ def test_induce_lemma_map_vocabulary_filtered(spark):
         (4, "hop hopping box boxes die dying untie untying"),
     ]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    m = induce_lemma_map(df, "text")
+    m = induce_lemma_map(df.select(F.split("text", " ").alias("toks")), "toks")
     assert m["walked"] == "walk" and m["walking"] == "walk"
     assert m["walks"] == "walk"
     assert m["hoping"] == "hope" and m["hoped"] == "hope"
@@ -295,27 +300,32 @@ def test_vocabulary_order_ignores_partitioning(spark, sf_dir):
 def test_single_pass_fit_matches_pipeline_fit(spark, sf_dir):
     """Differential: the single-pass fit equals the plain Pipeline.fit of
     build_tfidf_pipeline renumbered to sorted term order, bit for bit —
-    vocabulary, IDF vector, and norm_features recomputed from the plain
-    fit's unnormalized TF-IDF with Normalizer's arithmetic (squares summed
-    in index order, then one division per value). The lemma map is the
-    corpus's induced one, as build_features uses it."""
+    lemma map, vocabulary, IDF weights, and norm_features recomputed from
+    the plain fit's unnormalized TF-IDF with Normalizer's arithmetic
+    (squares summed in index order, then one division per value). The fit
+    is given the shipped fixture and induces the rest, as build_features
+    does; the reference gets the same union built by hand."""
     import math
 
     from movie_recommendation_etl_spark.ml.lemmas import induce_lemma_map
     from movie_recommendation_etl_spark.ml.tfidf import build_tfidf_pipeline
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    lemma_map = induce_lemma_map(docs, "text")
+    tokenizer = build_tfidf_pipeline("text").getStages()[0]
+    lemma_map = induce_lemma_map(tokenizer.transform(docs), "__tokens")
     lemma_map.update(load_default_lemmas())
     ref = build_tfidf_pipeline("text", lemma_map=lemma_map).fit(docs)
-    model, vecs = fit_document_vectors(docs, "text", lemma_map=lemma_map)
+    model, vecs = fit_document_vectors(
+        docs, "text", lemma_map=load_default_lemmas()
+    )
+    assert model.stages[1].getOrDefault("lemmaMap") == lemma_map
 
     ref_vocab = ref.stages[3].vocabulary
     vocab = model.stages[3].vocabulary
     assert vocab == sorted(ref_vocab)
     to_new = {i: vocab.index(t) for i, t in enumerate(ref_vocab)}
     ref_idf = ref.stages[4].idf.toArray()
-    new_idf = model.stages[4].idf.toArray()
+    new_idf = model.stages[4].getScalingVec().toArray()
     assert [new_idf[to_new[i]] for i in range(len(ref_vocab))] == list(ref_idf)
 
     got = dict(vecs.select("doc_id", "norm_features").collect())
@@ -333,3 +343,72 @@ def test_single_pass_fit_matches_pipeline_fit(spark, sf_dir):
         assert list(got[doc_id].indices) == [j for j, _ in pairs]
         assert list(got[doc_id].values) == want
     vecs.unpersist()
+
+
+def _small_corpus(spark):
+    words = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf"]
+    # word j is in documents 0..j, j + 1 times in each: document frequency
+    # j + 1 and total count (j + 1)^2. "hotel" is in 34 of the 40
+    # documents, a pair where Python's math.log((m + 1) / (df + 1))
+    # differs from Java's in the last bit. No two terms tie in total
+    # count. One document is empty, one has only stop words.
+    rows = []
+    for i in range(7):
+        toks = [w for j, w in enumerate(words) if j >= i for _ in range(j + 1)]
+        rows.append((i, " ".join(toks + ["hotel"] * (i < 3))))
+    rows += [(7, ""), (8, "the and of")]
+    rows += [(i, "hotel") for i in range(9, 40)]
+    return spark.createDataFrame(rows, "doc_id: long, text: string")
+
+
+def _reference_fit(df, **kwargs):
+    """(vocabulary, {term: idf}) of the MLlib estimators' fit."""
+    from movie_recommendation_etl_spark.ml.tfidf import build_tfidf_pipeline
+
+    ref = build_tfidf_pipeline(**kwargs).fit(df)
+    vocab = ref.stages[2].vocabulary
+    return vocab, dict(zip(vocab, ref.stages[3].idf.toArray().tolist()))
+
+
+def _fit(df, **kwargs):
+    model, vecs = fit_document_vectors(df, **kwargs)
+    vecs.unpersist()
+    vocab = model.stages[2].vocabulary
+    weights = model.stages[3].getScalingVec().toArray().tolist()
+    return vocab, dict(zip(vocab, weights))
+
+
+def test_vocabulary_cap_keeps_most_frequent_terms(spark, monkeypatch):
+    """Over the cap the vocabulary keeps the most frequent terms by total
+    count, as CountVectorizer(vocabSize=cap) does, then sorts them."""
+    from movie_recommendation_etl_spark.ml import tfidf
+
+    df = _small_corpus(spark)
+    monkeypatch.setattr(tfidf, "VOCAB_CAP", 4)
+    ref_vocab, ref_idf = _reference_fit(df, min_df=1, min_doc_freq=0)
+    vocab, idf = _fit(df, min_df=1, min_doc_freq=0)
+    assert vocab == sorted(ref_vocab) == ["echo", "foxtrot", "golf", "hotel"]
+    assert idf == ref_idf
+
+
+def test_min_doc_freq_above_min_df_zeroes_weights(spark):
+    """Terms kept by min_df but under min_doc_freq weigh 0, as in IDF.fit;
+    the rest weigh log((m + 1) / (df + 1)) over every document, the empty
+    and the stop-word-only one included."""
+    df = _small_corpus(spark)
+    vocab, idf = _fit(df, min_df=2, min_doc_freq=4)
+    ref_vocab, ref_idf = _reference_fit(df, min_df=2, min_doc_freq=4)
+    assert vocab == sorted(ref_vocab)
+    assert idf == ref_idf
+    assert [t for t in vocab if idf[t] == 0.0] == ["bravo", "charlie"]
+
+
+def test_empty_vocabulary_fails_loudly(spark):
+    """Where CountVectorizer.fit logs "The vocabulary size is empty" and
+    fits a model of zero-length vectors, the fit raises."""
+    import pytest
+
+    df = _small_corpus(spark)
+    assert _reference_fit(df, min_df=50)[0] == []
+    with pytest.raises(ValueError, match="The vocabulary size is empty"):
+        fit_document_vectors(df, min_df=50)
