@@ -403,33 +403,20 @@ def _cmd_trainprep(args: argparse.Namespace) -> int:
         curated = neardup_dedup(
             curated,
             threshold=args.neardup_threshold,
-            collapse_identical=args.neardup_collapse_identical,
             checkpoint_dir=args.checkpoint_dir,
             stats=nstats,
         )
         # Surface the guard counters with the drop count (r17, VERDICT
-        # r16 #7): a production run must see WHEN the bucket guard or
-        # identical-collapse star fired — those paths trade exact cliques
-        # for star certificates, which changes cluster granularity — not
-        # re-run with logging cranked up to find out.
+        # r16 #7): a production run must see WHEN the bucket guard fired
+        # — it trades exact cliques for star certificates, which changes
+        # cluster granularity — not re-run with logging cranked up to
+        # find out.
         guard_bits = [
             f"{nstats.get('overflow_buckets', 0)} overflow bucket(s)"
         ]
         if "max_bucket_size_seen" in nstats:
             guard_bits.append(
                 f"largest bucket {nstats['max_bucket_size_seen']}"
-            )
-        if "max_identical_group" in nstats:
-            guard_bits.append(
-                f"largest identical group {nstats['max_identical_group']}"
-            )
-        if "multi_groups" in nstats:
-            guard_bits.append(
-                f"{nstats['multi_groups']} collapsed group(s)"
-            )
-        if "overflow_groups" in nstats:
-            guard_bits.append(
-                f"{nstats['overflow_groups']} star-certified group(s)"
             )
         print(
             f"neardup: dropped {nstats.get('neardup_losers', 0)} "
@@ -1395,9 +1382,8 @@ def _cmd_neardup(args: argparse.Namespace) -> int:
     """MinHash-LSH near-duplicate detection over a parquet document table:
     writes verified (doc_a, doc_b, jaccard) pairs, optionally resolves
     transitive clusters (connected components). Candidate generation is
-    bucket-guarded — oversized near-identical band buckets star-join under
-    a logged cap — and identical-content collapse is available via
-    --collapse-identical; see operators/neardup.py for the scale
+    bucket-guarded — oversized near-identical or identical band buckets
+    star-join under a logged cap; see operators/neardup.py for the scale
     contract. This command only parses, validates, prints, and maps user
     errors to exit 1."""
     from pyspark.sql import functions as F
@@ -1417,9 +1403,12 @@ def _cmd_neardup(args: argparse.Namespace) -> int:
             file=sys.stderr,
         )
         return 1
-    if min(args.k, args.num_hashes, args.rows_per_band) < 1:
+    if min(
+        args.k, args.num_hashes, args.rows_per_band, args.max_bucket_size
+    ) < 1:
         print(
-            "--k / --num-hashes / --rows-per-band must be >= 1",
+            "--k / --num-hashes / --rows-per-band / --max-bucket-size "
+            "must be >= 1",
             file=sys.stderr,
         )
         return 1
@@ -1444,8 +1433,6 @@ def _cmd_neardup(args: argparse.Namespace) -> int:
         rows_per_band=args.rows_per_band,
         threshold=args.threshold,
         max_bucket_size=args.max_bucket_size,
-        group_clique_cap=args.group_clique_cap,
-        collapse_identical=args.collapse_identical,
         checkpoint_dir=args.checkpoint_dir,
         stats=stats,
     )
@@ -1463,12 +1450,6 @@ def _cmd_neardup(args: argparse.Namespace) -> int:
             "min-id star certificates: duplicates of each bucket's rep stay "
             "in one cluster, but member pairs not connected through the rep "
             "can lose their edge after Jaccard verification and fragment"
-        )
-    if stats.get("overflow_groups"):
-        print(
-            f"note: {stats['overflow_groups']} identical-content group(s) "
-            f"exceeded --group-clique-cap {args.group_clique_cap} — "
-            "rep->member stars emitted instead of the full clique"
         )
     if args.clusters:
         cstats: dict = {}
@@ -1612,15 +1593,8 @@ def build_parser() -> argparse.ArgumentParser:
     nd.add_argument(
         "--max-bucket-size", type=int, default=2000,
         help="band buckets above this star-join against their min id "
-        "under a logged guard (bounds near-identical clusters); buckets "
-        "below it emit their exact cliques",
-    )
-    nd.add_argument("--group-clique-cap", type=int, default=64)
-    nd.add_argument(
-        "--collapse-identical", action="store_true",
-        help="band one representative per identical-shingle-set group "
-        "(opt-in: pays ~3 extra narrow stages; for identical-heavy "
-        "corpora that have not been exact-deduped upstream)",
+        "under a logged guard (bounds near-identical and identical "
+        "clusters); buckets below it emit their exact cliques; >= 1",
     )
     nd.add_argument(
         "--clusters", default=None, metavar="OUT_PATH",
@@ -1839,13 +1813,6 @@ def build_parser() -> argparse.ArgumentParser:
         type=float,
         default=0.8,
         help="exact-Jaccard verify threshold for --neardup",
-    )
-    tp.add_argument(
-        "--neardup-collapse-identical",
-        action="store_true",
-        help="band only one representative per identical-shingle-set "
-        "group (worth it for rampantly duplicated un-deduped corpora; "
-        "see neardup_dedup)",
     )
     tp.add_argument(
         "--checkpoint-dir",

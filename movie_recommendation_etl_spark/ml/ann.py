@@ -73,15 +73,13 @@ def fit_lsh(
     features_col: str = "norm_features",
     *,
     bucket_length: float = BUCKET_LENGTH,
-    num_hash_tables: int = NUM_HASH_TABLES,
-    seed: int = SEED,
 ) -> BucketedRandomProjectionLSHModel:
     lsh = BucketedRandomProjectionLSH(
         inputCol=features_col,
         outputCol="hashes",
         bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
+        numHashTables=NUM_HASH_TABLES,
+        seed=SEED,
     )
     return lsh.fit(df)
 
@@ -417,9 +415,7 @@ def batch_ann(
     return merge(result, topk(exact))
 
 
-def embeddings_as_vectors(
-    spark: SparkSession, sf_dir: str, *, normalized: bool = True
-) -> DataFrame:
+def embeddings_as_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings table with the array<float> column promoted to VectorUDT
     (and L2-normalized so LSH Euclidean distance tracks cosine)."""
     from movie_recommendation_etl_spark.sources.catalog import load_table
@@ -427,8 +423,6 @@ def embeddings_as_vectors(
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", array_to_vector("embedding").alias("vec")
     )
-    if not normalized:
-        return emb
     return Normalizer(inputCol="vec", outputCol="norm_vec", p=2.0).transform(
         emb
     )

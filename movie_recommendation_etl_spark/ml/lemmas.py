@@ -31,7 +31,7 @@ each in the driver's dict (more while the collected rows are alive). A
 million-token vocabulary costs ≈100 MB, the same driver-resident bound
 the reference accepts by broadcasting AntBNC into its transform closures
 (SURVEY §4 broadcast row). The map returned is bounded by
-``max_entries``.
+``MAX_ENTRIES``.
 """
 
 from __future__ import annotations
@@ -128,23 +128,22 @@ def candidate_lemmas(tok: str) -> list[str]:
     return out
 
 
+# Bound on the induced map's size (entries kept in token order).
+MAX_ENTRIES = 500_000
+
+
 def induce_lemma_map(
-    docs: DataFrame,
-    tokens_col: str = "__tokens",
-    *,
-    min_count: int = 1,
-    max_entries: int = 500_000,
+    docs: DataFrame, tokens_col: str = "__tokens"
 ) -> dict[str, str]:
     """Corpus-driven lemma induction: {inflected: lemma} for every
     vocabulary token whose best rule-derived candidate is itself an
-    attested vocabulary word (count >= ``min_count``). ``tokens_col`` is
-    an array of tokens, in the TF-IDF pipeline the RegexTokenizer's
-    output (lowercase, split on \\W+), so induced keys are the tokens the
-    lemma stage will see.
+    attested vocabulary word. ``tokens_col`` is an array of tokens, in
+    the TF-IDF pipeline the RegexTokenizer's output (lowercase, split on
+    \\W+), so induced keys are the tokens the lemma stage will see.
 
     One distributed aggregation (token→count, one shuffle on token)
     collected to the driver, where the reverse rules run over the
-    distinct tokens; at most ``max_entries`` entries, in token order."""
+    distinct tokens; at most ``MAX_ENTRIES`` entries, in token order."""
     counts = dict(
         docs.select(F.explode(tokens_col).alias("tok"))
         .filter(F.col("tok").rlike("^[a-z]{2,}$"))
@@ -155,11 +154,9 @@ def induce_lemma_map(
     out: dict[str, str] = {}
     for tok in sorted(counts):
         for cand in candidate_lemmas(tok):
-            if len(cand) >= 2 and cand != tok and (
-                counts.get(cand, 0) >= min_count
-            ):
+            if len(cand) >= 2 and cand != tok and cand in counts:
                 out[tok] = cand
                 break
-        if len(out) == max_entries:
+        if len(out) == MAX_ENTRIES:
             break
     return out

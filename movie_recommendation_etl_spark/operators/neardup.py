@@ -17,18 +17,14 @@ shuffle on (band_idx, band_hash); the verify join touches only candidate
 pairs. Nothing is ever all-pairs ACROSS buckets — and since r15 nothing is
 quadratic WITHIN a bucket either. md5 uniformity spreads *distinct*
 signatures, but identical band hashes all land in one bucket, and a bucket
-of B near-identical docs (templated pages, mirrored boilerplate — the exact
-corpus shape near-dup exists to clean) would make the self-join emit
-B*(B-1)/2 pairs. Two explicit bounds close that:
-
-1. *Pre-collapse*: docs with IDENTICAL shingle sets (128-bit commutative
-   fingerprint riding the minhash aggregation — zero extra passes) collapse
-   to one banded representative; their pairwise Jaccard is exactly 1, so
-   small groups emit the exact clique and oversized groups a logged star —
-   see ``minhash_neardup_pairs``.
-2. *Bucket guard*: every (band_idx, band_hash) bucket larger than
-   ``max_bucket_size`` is logged and star-joined against its min doc id
-   instead of self-joined — see ``banded_candidate_pairs``.
+of B near-identical or identical docs (templated pages, mirrored
+boilerplate — the exact corpus shape near-dup exists to clean) would make
+the self-join emit B*(B-1)/2 pairs. The *bucket guard* closes that: every
+(band_idx, band_hash) bucket larger than ``max_bucket_size`` is logged and
+star-joined against its min doc id instead of self-joined — see
+``banded_candidate_pairs``. Byte-identical docs share ALL their band hashes,
+so the same guard bounds identical-content clusters: their star pairs have
+Jaccard exactly 1 and keep the cluster one connected component.
 """
 
 from __future__ import annotations
@@ -36,7 +32,6 @@ from __future__ import annotations
 import logging
 from functools import reduce
 
-import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -123,53 +118,31 @@ def minhash_bands(
     )
 
 
-def minhash_signature_cols(
-    base: DataFrame, num_hashes: int = 12, *, with_fingerprint: bool = False
-) -> DataFrame:
+def minhash_signature_cols(base: DataFrame, num_hashes: int = 12) -> DataFrame:
     """(doc_id, sh) -> (doc_id, mh0..mh{n-1}): the raw MinHash signature as
     one long column per hash (the agg shape HashAggregate needs — see
     minhash_bands' docstring). Shared by the banding path above and the
     incremental signature store (operators/incremental_dedup.py), which
     persists signatures so future batches can estimate Jaccard against the
-    corpus without its shingles.
-
-    ``with_fingerprint`` adds ``fp1``/``fp2``: a 128-bit order-independent
-    SET fingerprint (bit_xor of two independently-seeded xxhash64 values
-    per shingle) riding the SAME aggregation — zero extra passes, fully
-    map-side-combinable, no sort of the shingle arrays. Equal sets always
-    produce equal fingerprints (xor is commutative and sh is distinct);
-    unequal sets collide with probability ~2^-128 per pair — negligible
-    for the identical-set collapse it feeds (a collision would wrongly
-    collapse two docs; no adversarial inputs are assumed here)."""
+    corpus without its shingles."""
     coeffs = cw_coeffs(num_hashes)
     expl = base.select("doc_id", F.explode("sh").alias("s"))
     # Two-step select so md5 evaluates once per shingle (same-project CSE is
     # codegen-dependent; an explicit intermediate column is guaranteed).
-    proj1: list[Column] = [F.md5("s").alias("h")]
-    proj2: list[Column] = [
+    hashed = expl.select("doc_id", F.md5("s").alias("h")).select(
+        "doc_id",
         F.conv(F.col("h").substr(1, 8), 16, 10).cast("long").alias("w1"),
         F.conv(F.col("h").substr(9, 8), 16, 10).cast("long").alias("w2"),
-    ]
-    if with_fingerprint:
-        proj1 += [
-            F.xxhash64("s").alias("x1"),
-            F.xxhash64("s", F.lit(1)).alias("x2"),
+    )
+    return hashed.groupBy("doc_id").agg(
+        *[
+            F.min(
+                (F.lit(a) * F.col("w1") + F.lit(b) * F.col("w2") + F.lit(c))
+                % F.lit(CW_P)
+            ).alias(f"mh{i}")
+            for i, (a, b, c) in enumerate(coeffs)
         ]
-        proj2 += [F.col("x1"), F.col("x2")]
-    hashed = expl.select("doc_id", *proj1).select("doc_id", *proj2)
-    aggs = [
-        F.min(
-            (F.lit(a) * F.col("w1") + F.lit(b) * F.col("w2") + F.lit(c))
-            % F.lit(CW_P)
-        ).alias(f"mh{i}")
-        for i, (a, b, c) in enumerate(coeffs)
-    ]
-    if with_fingerprint:
-        aggs += [
-            F.bit_xor("x1").alias("fp1"),
-            F.bit_xor("x2").alias("fp2"),
-        ]
-    return hashed.groupBy("doc_id").agg(*aggs)
+    )
 
 
 def band_hashes(sig: list[Column], rows_per_band: int = 3) -> Column:
@@ -378,11 +351,8 @@ def minhash_neardup_pairs(
     num_hashes: int = 12,
     rows_per_band: int = 3,
     threshold: float = 0.8,
-    cache_shingles: bool = True,
     checkpoint_dir: str | None = None,
     max_bucket_size: int = 2000,
-    group_clique_cap: int = 64,
-    collapse_identical: bool = False,
     stats: dict | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: shingle → signature → band →
@@ -391,36 +361,21 @@ def minhash_neardup_pairs(
 
     Dup-heavy corpora are the TARGET input of this operator, so the
     quadratic hazard is bounded explicitly (r14 VERDICT #1):
+    near-identical docs share band hashes, so they concentrate in band
+    buckets; ``banded_candidate_pairs`` star-joins any bucket over
+    ``max_bucket_size`` (logged) instead of self-joining it.
+    Byte-identical docs share ALL their band hashes, so identical-content
+    clusters are bounded by the same guard: their star pairs have Jaccard
+    exactly 1.0 and keep the cluster one connected component. Buckets
+    UNDER the cap self-join normally — their output, including whole
+    identical-content cliques up to the cap, is bit-identical to the
+    unguarded join's.
 
-    * *Bucket guard* (always on): near-identical docs share band hashes,
-      so they concentrate in band buckets; ``banded_candidate_pairs``
-      star-joins any bucket over ``max_bucket_size`` (logged) instead of
-      self-joining it. Byte-identical docs share ALL their band hashes,
-      so identical-content clusters are bounded by the same guard.
-      Buckets UNDER the cap self-join normally — their output, including
-      whole identical-content cliques up to the cap, is bit-identical to
-      the unguarded join's.
-    * *Identical-set collapse* (``collapse_identical=True``, opt-in):
-      docs sharing a shingle-set fingerprint (a 128-bit commutative hash
-      riding the minhash aggregation — zero extra passes) have pairwise
-      Jaccard exactly 1 and identical signatures/bands, so only each
-      group's min-id REPRESENTATIVE is banded. Groups of ≤
-      ``group_clique_cap`` docs emit their exact clique and expand
-      verified cross-group rep pairs to all member pairs —
-      output-identical to the uncollapsed join; larger groups emit a
-      LOGGED rep→member star and keep rep-level cross pairs (q54-style
-      connected components are invariant). Opt-in because the guard
-      already bounds identical-content blowups and exact content dedup
-      normally runs upstream (plans/training_pipeline.py) — the collapse
-      pays ~3 extra narrow stages to skip re-hashing duplicate members,
-      worth it only when identical-content duplication is rampant AND
-      un-deduped.
-
-    ``cache_shingles`` persists the (doc_id, shingle-set) frame that three
-    consumers read (the signature pass + both sides of the verify join) —
+    The (doc_id, shingle-set) frame that three consumers read (the
+    signature pass + both sides of the verify join) is persisted —
     measured ~1.6x end-to-end vs recomputing the split/zip_with shingling
-    per consumer. The cached payload is O(corpus tokens); on a cluster
-    whose memory+disk cannot hold it, pass False and pay the recompute.
+    per consumer — and released before return. Its payload is
+    O(corpus tokens).
 
     ``checkpoint_dir`` switches the lineage-truncation points from
     ``localCheckpoint`` (executor blocks; lost with an executor) to
@@ -430,54 +385,90 @@ def minhash_neardup_pairs(
     dir and deletes this run's checkpoint files once the result is
     detached, so repeated invocations do not leak reliable-storage copies.
 
-    ``stats`` (optional dict) receives ``{"overflow_buckets": n, ...}``
-    from the guard (plus ``{"multi_groups": g, "overflow_groups": m}``
-    when collapsing).
+    ``stats`` (optional dict) receives the guard's
+    ``{"overflow_buckets": n, "max_bucket_size_seen": m}``.
     """
     from movie_recommendation_etl_spark.operators._checkpoint import (
         reliable_checkpoint_scope,
     )
+    from movie_recommendation_etl_spark.operators.skew import (
+        right_size_materialized,
+    )
 
-    with reliable_checkpoint_scope(
-        docs.sparkSession, checkpoint_dir
-    ) as _ckpt:
-        return _minhash_neardup_pairs(
-            docs, id_col, text_col, k=k, num_hashes=num_hashes,
-            rows_per_band=rows_per_band, threshold=threshold,
-            cache_shingles=cache_shingles, reliable=checkpoint_dir is not None,
-            ckpt=_ckpt, max_bucket_size=max_bucket_size,
-            group_clique_cap=group_clique_cap,
-            collapse_identical=collapse_identical, stats=stats,
+    with reliable_checkpoint_scope(docs.sparkSession, checkpoint_dir) as ckpt:
+        toks = F.split(F.col(text_col), " ")
+        # Docs with zero shingles can never pass verify (Jaccard over an
+        # empty set is NULL), and at scale they would all share one
+        # degenerate LSH bucket — drop them before hashing.
+        base_cache = (
+            docs.select(
+                F.col(id_col).alias("doc_id"), word_shingles(toks, k).alias("sh")
+            )
+            .filter(F.size("sh") > 0)
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
+        # Right-size the shingle frame (r17, the q53 drift cause): it
+        # inherits the input's partition count (64 nearly-empty partitions
+        # at bench scale) and feeds the signature aggregation plus BOTH
+        # verify-join sides — each a per-partition-scheduled stage. The
+        # count doubles as the cache materialization; the coalesce is a
+        # no-op at real scale (rows/50k >= partitions). unpersist goes
+        # through base_cache — calling it on the coalesced wrapper would
+        # leak the cache.
+        base = right_size_materialized(base_cache)
+        # Band-frame persist, tiny payload: (doc_id, 4 band hashes ~ 130
+        # bytes/row) — O(docs), not O(corpus); the guard's bucket-size
+        # pass and the self-join share its one materialization, and
+        # right-sizing drops the per-stage scheduling tax for those three
+        # consumers the same way.
+        bands_df = minhash_bands(base, num_hashes, rows_per_band).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+        exploded, prior_cols = explode_bands_with_priors(
+            right_size_materialized(bands_df), -(-num_hashes // rows_per_band)
+        )
+        # banded_candidate_pairs materializes the (small, O(candidates))
+        # pair set through ckpt, so the persisted band frame releases
+        # immediately (r2 ADVICE: repeated invocations must not
+        # accumulate cached blocks for the session lifetime).
+        pairs = banded_candidate_pairs(
+            exploded,
+            max_bucket_size=max_bucket_size,
+            prior_match_cols=prior_cols,
+            stats=stats,
+            materialize=ckpt,
+        )
+        bands_df.unpersist()
+        # Materialize the (small, O(verified pairs)) result so the
+        # O(corpus tokens) shingle cache releases before return.
+        verified = ckpt(_verify_pairs(pairs, base, threshold))
+        base_cache.unpersist()
+        if checkpoint_dir is not None:
+            # detach the result onto local blocks BEFORE the scope exit
+            # deletes this run's reliable checkpoint files
+            verified = verified.localCheckpoint(eager=True)
+        return verified
 
 
 def neardup_dedup(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     *,
-    k: int = 3,
-    num_hashes: int = 12,
-    rows_per_band: int = 3,
     threshold: float = 0.8,
-    cache_shingles: bool = True,
     checkpoint_dir: str | None = None,
-    max_bucket_size: int = 2000,
-    group_clique_cap: int = 64,
-    collapse_identical: bool = False,
     stats: dict | None = None,
 ) -> DataFrame:
     """Fuzzy-dedup stage (r16, VERDICT r15 #4): the standard RefinedWeb/
     Dolma-style pipeline step the reference's similarity machinery exists
     for (reference transform/execute.ipynb:1645-1670 ranks by pairwise
     cosine) — MinHash near-dup pairs → connected components → keep each
-    cluster's MIN-ID survivor, drop the other members. Docs in no cluster
-    pass through untouched; the output schema is exactly ``docs``'s.
+    cluster's MIN-ID survivor, drop the other members. ``docs`` has
+    ``doc_id`` and ``text`` columns; docs in no cluster pass through
+    untouched and the output schema is exactly ``docs``'s.
 
     Composition, not new machinery: pairs come from the bounded
-    :func:`minhash_neardup_pairs` (bucket guard always on; see its
-    docstring for the overflow-bucket fragmentation trade) and clusters
-    from ``operators.graph.connected_components`` (pointer doubling,
+    :func:`minhash_neardup_pairs` at its defaults (see its docstring for
+    the overflow-bucket fragmentation trade) and clusters from
+    ``operators.graph.connected_components`` (pointer doubling,
     checkpointed rounds). The survivor rule matches exact dedup
     (operators/dedup.py) and the incremental admission stores: smallest id
     wins, so re-runs and incremental replays agree on survivors.
@@ -493,21 +484,8 @@ def neardup_dedup(
         connected_components,
     )
 
-    pair_stats: dict = {} if stats is None else stats
     pairs = minhash_neardup_pairs(
-        docs,
-        id_col,
-        text_col,
-        k=k,
-        num_hashes=num_hashes,
-        rows_per_band=rows_per_band,
-        threshold=threshold,
-        cache_shingles=cache_shingles,
-        checkpoint_dir=checkpoint_dir,
-        max_bucket_size=max_bucket_size,
-        group_clique_cap=group_clique_cap,
-        collapse_identical=collapse_identical,
-        stats=pair_stats,
+        docs, threshold=threshold, checkpoint_dir=checkpoint_dir, stats=stats
     )
     cc_stats: dict = {}
     labels = connected_components(
@@ -515,318 +493,21 @@ def neardup_dedup(
         "doc_a",
         "doc_b",
         checkpoint_dir=checkpoint_dir,
-        # verified pairs are distinct with doc_a < doc_b by construction
-        # (both pipeline modes), so CC can skip the symmetrized frame's
-        # distinct — one full 2·|pairs| shuffle fewer (r20, guide §2.4)
+        # verified pairs are distinct with doc_a < doc_b by construction,
+        # so CC can skip the symmetrized frame's distinct — one full
+        # 2·|pairs| shuffle fewer (r20, guide §2.4)
         edges_distinct=True,
         stats=cc_stats,
     )
     losers = labels.filter(F.col("node") != F.col("cluster_id")).select(
-        F.col("node").alias(id_col)
+        F.col("node").alias("doc_id")
     )
     if stats is not None:
         stats["cc_rounds"] = cc_stats.get("rounds", 0)
         if "fast_path_edges" in cc_stats:
             stats["fast_path_edges"] = cc_stats["fast_path_edges"]
         stats["neardup_losers"] = losers.count()
-    return docs.join(losers, id_col, "left_anti")
-
-
-def _minhash_neardup_pairs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    k: int,
-    num_hashes: int,
-    rows_per_band: int,
-    threshold: float,
-    cache_shingles: bool,
-    reliable: bool,
-    ckpt,
-    max_bucket_size: int,
-    group_clique_cap: int,
-    collapse_identical: bool,
-    stats: dict | None,
-) -> DataFrame:
-    _ckpt = ckpt
-    toks = F.split(F.col(text_col), " ")
-    sh = word_shingles(toks, k)
-    # Docs with zero shingles can never pass verify (Jaccard over an empty
-    # set is NULL), and at scale they would all share one degenerate LSH
-    # bucket — drop them before hashing.
-    base = docs.select(F.col(id_col).alias("doc_id"), sh.alias("sh")).filter(
-        F.size("sh") > 0
-    )
-    base_cache = None
-    if cache_shingles:
-        base_cache = base.persist(StorageLevel.MEMORY_AND_DISK)
-        # Right-size the shingle frame too (r17, the q53 drift cause):
-        # it inherits the input's partition count (64 nearly-empty
-        # partitions at bench scale) and feeds the signature aggregation
-        # plus BOTH verify-join sides — each a per-partition-scheduled
-        # stage. The count doubles as the cache materialization; the
-        # coalesce is a no-op at real scale (rows/50k >= partitions).
-        # Only on the cached path: uncached lineage would pay a full
-        # recompute for the count. unpersist goes through base_cache —
-        # calling it on the coalesced wrapper would leak the cache.
-        from movie_recommendation_etl_spark.operators.skew import (
-            right_size_materialized,
-        )
-
-        base = right_size_materialized(base_cache)
-
-    if not collapse_identical:
-        # Guard-only fast path (default): identical to the unguarded
-        # pipeline when nothing overflows — two deep jobs, no extra
-        # stages. Band-frame persist, tiny payload: (doc_id, 4 band
-        # hashes ~ 130 bytes/row) — O(docs), not O(corpus); the guard's
-        # bucket-size pass and the self-join share its one
-        # materialization.
-        bands_df = minhash_bands(base, num_hashes, rows_per_band).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        # The count materializes the cache (the detection job did this
-        # implicitly before); right-sizing then drops the per-stage
-        # scheduling tax for the three consumers (detection, both join
-        # sides) — the q53 drift cause applies to this path identically
-        # (r17; no-op at real scale, see right_size_materialized).
-        from movie_recommendation_etl_spark.operators.skew import (
-            right_size_materialized,
-        )
-
-        bands_read = right_size_materialized(bands_df)
-        exploded, prior_cols = explode_bands_with_priors(
-            bands_read, -(-num_hashes // rows_per_band)
-        )
-        # banded_candidate_pairs materializes the (small, O(candidates))
-        # pair set through _ckpt, so the persisted band frame releases
-        # immediately (r2 ADVICE: repeated invocations must not
-        # accumulate cached blocks for the session lifetime).
-        guard_stats: dict = {} if stats is None else stats
-        pairs = banded_candidate_pairs(
-            exploded,
-            max_bucket_size=max_bucket_size,
-            prior_match_cols=prior_cols,
-            stats=guard_stats,
-            materialize=_ckpt,
-        )
-        if guard_stats.get("overflow_buckets"):
-            # Collapse auto-hint (r16, VERDICT r15 #6): when the overflow
-            # is driven by IDENTICAL content — docs sharing their whole
-            # SHINGLE SET, exactly the groups collapse_identical would
-            # band as one representative + exact clique — say so loudly
-            # instead of leaving the cheaper path knowledge-gated. One
-            # extra map-side-combined single-row job over the (persisted)
-            # shingle frame — an in-expression xor-of-xxhash64 set
-            # fingerprint, no explode, no sort — paid ONLY on the
-            # overflow path; the clean path stays byte-identical (the
-            # guard-cost contract in banded_candidate_pairs). Near-
-            # identical-but-distinct corpora (the other overflow shape,
-            # which the collapse canNOT absorb) leave every group at
-            # size 1 and get no hint.
-            set_fp = F.aggregate(
-                F.col("sh"),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc.bitwiseXOR(F.xxhash64(x)),
-            )
-            biggest_ident = int(
-                base.groupBy(set_fp.alias("_fp"))
-                .agg(F.count(F.lit(1)).alias("_g"))
-                .agg(F.coalesce(F.max("_g"), F.lit(0)))
-                .first()[0]
-            )
-            if stats is not None:
-                stats["max_identical_group"] = biggest_ident
-            if biggest_ident > max_bucket_size:
-                log.warning(
-                    "minhash_neardup_pairs: %d docs share ONE identical "
-                    "shingle set (> max_bucket_size=%d) — the overflow is "
-                    "identical-content-dominated; re-run with "
-                    "collapse_identical=True to band a single "
-                    "representative per identical group and emit exact "
-                    "cliques instead of star certificates",
-                    biggest_ident,
-                    max_bucket_size,
-                )
-        bands_df.unpersist()
-        verified = _verify_pairs(pairs, base, threshold)
-        if cache_shingles:
-            # Materialize the (small, O(verified pairs)) result so the
-            # O(corpus tokens) shingle cache releases before return.
-            verified = _ckpt(verified)
-            base_cache.unpersist()
-        if reliable:
-            verified = verified.localCheckpoint(eager=True)
-        return verified
-
-    # ---- collapse_identical=True ---------------------------------------
-    # An order-independent 128-bit set fingerprint (fp1, fp2) rides the
-    # minhash aggregation itself (see minhash_signature_cols) — no extra
-    # pass over the shingles, no array sort, no payload shuffle. The
-    # narrow signature frame (14 longs/doc) is the hub every downstream
-    # step reads.
-    sig = minhash_signature_cols(base, num_hashes, with_fingerprint=True)
-    if cache_shingles:
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    multi_groups = (
-        sig.groupBy("fp1", "fp2")
-        .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("gsz"))
-        .filter(F.col("gsz") > 1)
-    )
-    # Members of multi-doc groups: EMPTY on a fully-distinct corpus,
-    # large only on the mass-duplicated corpora this mode exists for.
-    # Declarative throughout — AQE broadcasts the joins against it while
-    # it is small and shuffles when it is not.
-    multi = (
-        sig.select("doc_id", "fp1", "fp2")
-        .join(multi_groups, ["fp1", "fp2"])
-        .select("doc_id", "rep", "gsz", "fp1", "fp2")
-    )
-    if cache_shingles:
-        # gated like sig/base: the uncached mode trades recompute for
-        # memory by contract, and an ungated persist would leak blocks
-        # past return (nothing would unpersist it)
-        multi = multi.persist(StorageLevel.MEMORY_AND_DISK)
-    excl = multi.filter(F.col("doc_id") != F.col("rep")).select("doc_id")
-    # Only representatives are banded: a 100k-doc identical cluster
-    # contributes ONE row to every downstream band bucket.
-    reps_sig = sig.join(excl, "doc_id", "left_anti")
-    reps_sh = base.join(excl, "doc_id", "left_anti")
-    # Bands derive from the cached signature frame per consumer (md5 of
-    # 4 small concatenations per row — cheaper than another persist).
-    bands_df = reps_sig.select(
-        "doc_id",
-        band_hashes(
-            [F.col(f"mh{i}").cast("string") for i in range(num_hashes)],
-            rows_per_band,
-        ).alias("bands"),
-    )
-    # bands_df is lineage off the CACHED sig frame, not materialized
-    # itself: the helper's getItem(i) references simplify to the single
-    # band-i md5 expression (SimplifyExtractValueOps), so the prior
-    # columns cost at most n_bands-1 extra short-string md5s per row.
-    exploded, prior_cols = explode_bands_with_priors(
-        bands_df, -(-num_hashes // rows_per_band)
-    )
-    pairs = banded_candidate_pairs(
-        exploded,
-        max_bucket_size=max_bucket_size,
-        prior_match_cols=prior_cols,
-        stats=stats,
-        materialize=_ckpt,
-    )
-    # Collapse counters: one SMALL aggregate on the (persisted, cache-hot
-    # from the anti join above) multi frame. Not DataFrame.observe: AQE
-    # legitimately empty-propagates past an observed node when a join
-    # side or the action's result is empty (verified empirically),
-    # leaving an invalid metrics row.
-    is_rep = F.col("doc_id") == F.col("rep")
-    got_multi = multi.agg(
-        F.coalesce(F.sum(is_rep.cast("long")), F.lit(0)).alias("n_groups"),
-        F.coalesce(
-            F.sum(
-                (is_rep & (F.col("gsz") > group_clique_cap)).cast("long")
-            ),
-            F.lit(0),
-        ).alias("n_over"),
-    ).first()
-    n_over_groups = int(got_multi["n_over"])
-    n_multi_groups = int(got_multi["n_groups"])
-    if stats is not None:
-        stats["multi_groups"] = n_multi_groups
-        stats["overflow_groups"] = n_over_groups
-    if n_over_groups:
-        log.warning(
-            "minhash_neardup_pairs: %d identical-shingle-set group(s) "
-            "exceed group_clique_cap=%d; emitting rep->member stars "
-            "(jaccard exactly 1.0) instead of the quadratic clique — "
-            "connected components of the duplicate relation are preserved",
-            n_over_groups,
-            group_clique_cap,
-        )
-    verified_reps = _verify_pairs(pairs, reps_sh, threshold)
-    if n_multi_groups == 0:
-        # fully-distinct corpus: every group is a singleton — rep pairs
-        # ARE the answer
-        verified = verified_reps
-    else:
-        # Expand rep-level pairs back to member pairs. Each rep's
-        # expansion set is its whole group when small (exact: every member
-        # shares the rep's bands, so the uncollapsed join would have made
-        # the identical candidates, and Jaccard depends only on the set)
-        # or just the rep when the group overflows the clique cap
-        # (rep-level pairs only — logged above). LEFT joins against the
-        # small member frame (which contains each group's rep row too, so
-        # a matched side expands to its full member set exactly once); an
-        # unmatched side coalesces back to the rep itself.
-        exp = multi.filter(F.col("gsz") <= group_clique_cap).select(
-            F.col("rep").alias("_r"), F.col("doc_id").alias("_m")
-        )
-        mem_a = exp.select(
-            F.col("_r").alias("doc_a"), F.col("_m").alias("_ma")
-        )
-        mem_b = exp.select(
-            F.col("_r").alias("doc_b"), F.col("_m").alias("_mb")
-        )
-        cross = (
-            verified_reps.join(mem_a, "doc_a", "left")
-            .select(
-                F.coalesce(F.col("_ma"), F.col("doc_a")).alias("_xa"),
-                "doc_b",
-                "jaccard",
-            )
-            .join(mem_b, "doc_b", "left")
-            .select(
-                F.least(
-                    "_xa", F.coalesce(F.col("_mb"), F.col("doc_b"))
-                ).alias("doc_a"),
-                F.greatest(
-                    "_xa", F.coalesce(F.col("_mb"), F.col("doc_b"))
-                ).alias("doc_b"),
-                "jaccard",
-            )
-        )
-        # Within-group pairs: Jaccard is exactly 1.0 (intersection =
-        # union), so they pass any threshold <= 1 without touching the
-        # verify join. Small groups emit the exact clique; overflow
-        # groups the rep->member star.
-        small = multi.filter(F.col("gsz") <= group_clique_cap).select(
-            "fp1", "fp2", "doc_id"
-        )
-        sa, sb = small.alias("sa"), small.alias("sb")
-        within_small = sa.join(
-            sb,
-            (F.col("sa.fp1") == F.col("sb.fp1"))
-            & (F.col("sa.fp2") == F.col("sb.fp2"))
-            & (F.col("sa.doc_id") < F.col("sb.doc_id")),
-        ).select(
-            F.col("sa.doc_id").alias("doc_a"),
-            F.col("sb.doc_id").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        within_star = multi.filter(
-            (F.col("gsz") > group_clique_cap)
-            & (F.col("doc_id") != F.col("rep"))
-        ).select(
-            F.col("rep").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-        verified = cross.unionByName(within_small).unionByName(within_star)
-    if cache_shingles:
-        # Materialize the (small, O(verified pairs)) result so the
-        # O(corpus tokens) shingle cache releases before return (r2
-        # ADVICE's no-session-lifetime-leak rule).
-        verified = _ckpt(verified)
-        multi.unpersist()
-        sig.unpersist()
-        base_cache.unpersist()
-    if reliable:
-        # detach the result onto local blocks BEFORE the scope exit
-        # deletes this run's reliable checkpoint files
-        verified = verified.localCheckpoint(eager=True)
-    return verified
+    return docs.join(losers, "doc_id", "left_anti")
 
 
 def shingle_hash60(sh: Column) -> Column:
@@ -849,7 +530,7 @@ def _verify_pairs(
     pairs: DataFrame, shingle_sets: DataFrame, threshold: float
 ) -> DataFrame:
     """Jaccard verification of candidate pairs against the (doc_id, sh)
-    shingle frame — shared by both pipeline modes.
+    shingle frame.
 
     The per-pair set intersection runs over 60-bit md5-mapped shingles
     (:func:`shingle_hash60`), not raw strings: hashing happens ONCE per
@@ -993,40 +674,6 @@ def srp_bands(
     return F.expr("array(" + ", ".join(bands) + ")")
 
 
-def srp_bands_vectorized(
-    vec_col: str, *, dim: int, n_bits: int = 96, rows_per_band: int = 8
-) -> Column:
-    """Arrow-batched twin of :func:`srp_bands`: the same hyperplanes and
-    band packing, computed as one numpy sign-matmul per batch instead of
-    n_bits interpreted expression folds per row.
-
-    This is the 100 TB scan path: the expression form costs ~0.4 ms/row
-    (Catalyst evaluates higher-order folds interpreted, never codegen), which
-    is days of CPU per billion rows; the matmul is ~1 us/row. The price is
-    bit-exactness: BLAS sums in a different order than the sequential fold,
-    so a dot within float-rounding of zero can flip a bit. For LSH candidate
-    generation that moves individual borderline candidates, not correctness
-    (verification is exact either way) — but the DuckDB-oracle-gated queries
-    pin the expression form so the gate stays bit-for-bit.
-    tests/test_neardup_similarity.py asserts both paths produce identical
-    bands on the driver testdata.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    signs = np.asarray(srp_signs(n_bits, dim))  # (n_bits, dim)
-    weights = 2 ** np.arange(rows_per_band - 1, -1, -1)  # MSB-first packing
-
-    @pandas_udf("array<int>")
-    def _bands(batch: pd.Series) -> pd.Series:
-        mat = np.vstack(batch.to_numpy())  # (n, dim)
-        bits = (mat @ signs.T) > 0.0  # (n, n_bits)
-        vals = bits.reshape(len(mat), -1, rows_per_band) @ weights
-        return pd.Series(list(vals.astype("int32")))
-
-    return _bands(F.col(vec_col).cast("array<double>"))
-
-
 def srp_candidate_pairs(
     vecs: DataFrame,
     id_col: str = "vec_id",
@@ -1036,17 +683,14 @@ def srp_candidate_pairs(
     dim: int,
     n_bits: int = 96,
     rows_per_band: int = 8,
-    impl: str = "expr",
     max_bucket_size: int = 2000,
     stats: dict | None = None,
 ) -> DataFrame:
     """(id, label, vec) -> DISTINCT candidate pairs (id_a < id_b) from the
     two-level (label, srp band) blocking — never all-pairs within a label.
 
-    ``impl``: "expr" (default) evaluates the bands as a deterministic
-    Catalyst expression — bit-for-bit reproducible in the DuckDB oracle;
-    "vectorized" uses the Arrow/numpy scan path (srp_bands_vectorized) —
-    ~400x less per-row CPU, the right choice at production scale.
+    The bands are the deterministic Catalyst expression of
+    :func:`srp_bands`, bit-for-bit reproducible in the DuckDB oracle.
 
     Scale shape: band payload is O(rows) ints (persisted once so the
     self-join doesn't re-derive the projection twice — Catalyst would inline
@@ -1069,7 +713,6 @@ def srp_candidate_pairs(
     labels+bands for near-dup detection; for low-threshold similarity use
     the IVF path (ml/ivf.py) and accept approximate recall.
     """
-    band_fn = srp_bands if impl == "expr" else srp_bands_vectorized
     # localCheckpoint, not persist: the band expression is a ~96x64-literal
     # tree whose ANALYSIS alone costs real driver time, and the guarded
     # join below runs THREE actions over this frame (bucket-size agg,
@@ -1080,7 +723,7 @@ def srp_candidate_pairs(
     banded = vecs.select(
         F.col(id_col).alias("_id"),
         F.col(label_col).alias("_lbl"),
-        band_fn(
+        srp_bands(
             vec_col, dim=dim, n_bits=n_bits, rows_per_band=rows_per_band
         ).alias("_bands"),
     ).localCheckpoint(eager=True)

@@ -194,10 +194,8 @@ def q50_minhash_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     star-joined under a logged guard
     (operators/neardup.py:banded_candidate_pairs); buckets under the cap
     self-join normally, so on this corpus the guard never fires and the
-    output is bit-identical to the unguarded join the oracle replays.
-    (The opt-in identical-set collapse exists for identical-heavy
-    un-deduped corpora — tests/test_neardup_bounds.py proves both modes
-    equal the unguarded join wherever no cap triggers.)"""
+    output is bit-identical to the unguarded join the oracle replays
+    (tests/test_neardup_bounds.py fuzzes that equality)."""
     docs = load_table(spark, sf_dir, "documents")
     return minhash_neardup_pairs(_with_twins(docs))
 

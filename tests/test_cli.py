@@ -1439,6 +1439,8 @@ def test_cli_neardup_pairs_and_clusters(capsys, spark, tmp_path):
     # user errors: named message, exit 1, no traceback
     assert main(["neardup", src, pairs_out, "--threshold", "1.5"]) == 1
     assert "--threshold" in capsys.readouterr().err
+    assert main(["neardup", src, pairs_out, "--max-bucket-size", "0"]) == 1
+    assert "--max-bucket-size" in capsys.readouterr().err
     assert main(["neardup", src, pairs_out, "--id-col", "nope"]) == 1
     assert "nope" in capsys.readouterr().err
     assert main(

@@ -3,16 +3,12 @@
 The hazard: md5 uniformity spreads *distinct* band signatures, but a viral
 near-identical cluster (templated pages — the exact corpus near-dup exists
 to clean) shares band hashes, so the unguarded bucket self-join emits
-B*(B-1)/2 candidate pairs for a B-row bucket. These tests pin the two
-bounds that close it:
-
-* identical-set collapse — identical shingle sets band ONE representative
-  (exact clique below the cap, logged star above);
-* the bucket guard — (band_idx, band_hash) buckets over ``max_bucket_size``
-  are star-joined against their min id instead of self-joined;
-
-and prove output-equality with the unguarded join wherever neither bound
-triggers (the correctness-gate corpora) or only small groups exist.
+B*(B-1)/2 candidate pairs for a B-row bucket. These tests pin the bound
+that closes it — the bucket guard: (band_idx, band_hash) buckets over
+``max_bucket_size`` are star-joined against their min id instead of
+self-joined, for near-identical and byte-identical clusters alike — and
+prove output-equality with the unguarded join wherever the guard does not
+trigger (the correctness-gate corpora), identical groups included.
 """
 
 from __future__ import annotations
@@ -37,7 +33,7 @@ from movie_recommendation_etl_spark.operators.neardup import (
 def _unguarded_pairs(docs, threshold=0.8):
     """The pre-r15 pipeline (band every doc, plain bucket self-join, exact
     verify) — the semantic reference the bounded path must match whenever
-    no identical-set group exceeds the clique cap and no bucket overflows."""
+    no bucket overflows."""
     toks = F.split(F.col("text"), " ")
     base = docs.select(
         F.col("doc_id"), word_shingles(toks, 3).alias("sh")
@@ -114,10 +110,9 @@ def test_bucket_guard_unit(spark):
 def test_near_identical_cluster_stays_linear(spark):
     """The verdict's named scale-killer: a 10k-doc near-identical cluster
     (shared template, one unique trailing token each — shingle sets are
-    DISTINCT, so the collapse cannot absorb it) must produce O(cluster)
-    candidate pairs via the bucket guard, not O(cluster^2), and connected
-    components over the verified pairs must still land the whole cluster
-    in ONE group."""
+    DISTINCT) must produce O(cluster) candidate pairs via the bucket
+    guard, not O(cluster^2), and connected components over the verified
+    pairs must still land the whole cluster in ONE group."""
     n = 10_000
     template = " ".join(f"w{j}" for j in range(40))
     docs = spark.createDataFrame(
@@ -146,54 +141,11 @@ def test_near_identical_cluster_stays_linear(spark):
     pairs.unpersist()
 
 
-def test_overflow_hint_fires_on_identical_heavy_corpus(spark, caplog):
-    """r16 auto-hint: with collapse OFF, an identical-content overflow (the
-    shape collapse_identical exists for) must log the re-run hint and
-    record max_identical_group; a near-identical-but-distinct overflow
-    (which the collapse cannot absorb) must NOT hint."""
-    import logging
-
-    n = 3_000
-    text = " ".join(f"w{j}" for j in range(40))
-    ident = spark.createDataFrame(
-        [(i, text) for i in range(n)], "doc_id long, text string"
-    )
-    stats: dict = {}
-    with caplog.at_level(
-        logging.WARNING, logger="movie_recommendation_etl_spark"
-    ):
-        minhash_neardup_pairs(ident, max_bucket_size=500, stats=stats).count()
-    assert stats["overflow_buckets"] >= 1
-    assert stats["max_identical_group"] == n
-    assert any(
-        "collapse_identical=True" in r.message for r in caplog.records
-    )
-
-    # distinct shingle sets (unique trailing token): overflow still fires,
-    # but every identical group has size 1 -> no hint
-    caplog.clear()
-    near = spark.createDataFrame(
-        [(i, f"{text} u{i}") for i in range(n)], "doc_id long, text string"
-    )
-    stats2: dict = {}
-    with caplog.at_level(
-        logging.WARNING, logger="movie_recommendation_etl_spark"
-    ):
-        minhash_neardup_pairs(near, max_bucket_size=500, stats=stats2).count()
-    assert stats2["overflow_buckets"] >= 1
-    assert stats2["max_identical_group"] == 1
-    assert not any(
-        "collapse_identical=True" in r.message for r in caplog.records
-    )
-
-
 def test_identical_cluster_collapses_to_star(spark):
-    """collapse_identical=True: 10k byte-identical docs collapse to ONE
-    banded representative — no bucket ever overflows (one rep per bucket),
-    the within-group output is the logged rep->member star with jaccard
-    exactly 1.0, and clustering still sees one component. (In the default
-    guard-only mode the same corpus is bounded by the BUCKET guard
-    instead — covered by the near-identical test above.)"""
+    """10k byte-identical docs share ALL their band hashes, so every band
+    bucket overflows the guard and star-joins against the min id: the
+    verified output is exactly the min-id star with jaccard 1.0 (never
+    the ~5e7-pair clique), and clustering still sees one component."""
     n = 10_000
     text = " ".join(f"w{j}" for j in range(40))
     docs = spark.createDataFrame(
@@ -201,12 +153,11 @@ def test_identical_cluster_collapses_to_star(spark):
     )
     stats: dict = {}
     pairs = minhash_neardup_pairs(
-        docs, max_bucket_size=1000, group_clique_cap=64,
-        collapse_identical=True, stats=stats,
+        docs, max_bucket_size=1000, stats=stats
     ).persist()
     rows = pairs.collect()
-    assert stats["overflow_buckets"] == 0
-    assert stats["overflow_groups"] == 1
+    assert stats["overflow_buckets"] == 4  # every band: 12 hashes / 3 rows
+    assert stats["max_bucket_size_seen"] == n
     assert {(r["doc_a"], r["doc_b"]) for r in rows} == {
         (0, i) for i in range(1, n)
     }
@@ -216,14 +167,14 @@ def test_identical_cluster_collapses_to_star(spark):
     pairs.unpersist()
 
 
-@pytest.mark.parametrize("seed", [7, 41])
-@pytest.mark.parametrize("collapse", [False, True])
-def test_collapse_matches_unguarded_join(spark, seed, collapse):
-    """Fuzz equivalence in BOTH modes: on corpora mixing unique docs,
-    planted identical groups (sizes 2-5, all under the clique cap), and
-    truncated twins, the guarded pipeline — with and without the
-    identical-set collapse — emits EXACTLY the unguarded join's rows:
-    same pairs, same jaccard values (the correctness-gate contract)."""
+# ids keep the earlier [collapse-seed] form, with the guard-only pipeline
+# as the "False" mode, so the test's history lines up across renames
+@pytest.mark.parametrize("seed", [7, 41], ids=["False-7", "False-41"])
+def test_collapse_matches_unguarded_join(spark, seed):
+    """Fuzz equivalence: on corpora mixing unique docs, planted identical
+    groups (sizes 2-5, all under the bucket cap), and truncated twins,
+    the guarded pipeline emits EXACTLY the unguarded join's rows: same
+    pairs, same jaccard values (the correctness-gate contract)."""
     rng = random.Random(seed)
     vocab = [f"t{j}" for j in range(30)]
     rows, next_id = [], 0
@@ -245,17 +196,9 @@ def test_collapse_matches_unguarded_join(spark, seed, collapse):
         add(" ".join(rows[i][1].split(" ")[:-2]))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     stats: dict = {}
-    got = _rows(
-        minhash_neardup_pairs(
-            docs, group_clique_cap=64, collapse_identical=collapse,
-            stats=stats,
-        )
-    )
+    got = _rows(minhash_neardup_pairs(docs, stats=stats))
     want = _rows(_unguarded_pairs(docs))
     assert stats["overflow_buckets"] == 0
-    if collapse:
-        assert stats["overflow_groups"] == 0
-        assert stats["multi_groups"] == 8
     assert got == want
     assert want  # the corpus must actually exercise near-dup pairs
 

@@ -100,8 +100,8 @@ def test_cli_trainprep_neardup_stage(capsys, spark, tmp_path):
     captured = capsys.readouterr()
     assert "neardup: dropped 4 near-duplicate doc(s)" in captured.err
     # r17 (VERDICT r16 #7): the stage summary surfaces the guard counters
-    # so a production run sees when the bucket guard / collapse star
-    # fired without re-running with logging cranked up
+    # so a production run sees when the bucket guard fired without
+    # re-running with logging cranked up
     assert "0 overflow bucket(s)" in captured.err
     summary = json.loads(captured.out.strip().splitlines()[-1])
     # token conservation through shards -> packing survives the new stage

@@ -137,44 +137,6 @@ def test_srp_blocking_prunes_and_recalls(spark, sf_dir):
     assert found == truth
 
 
-def test_srp_vectorized_matches_expression_path(spark, sf_dir):
-    """The Arrow/numpy scale path (srp_bands_vectorized) must produce the
-    same bands as the deterministic expression path on the driver testdata.
-    They can only diverge when a hyperplane dot lands within float-rounding
-    of zero (BLAS vs sequential summation order) — not the case for real
-    embeddings, as this asserts."""
-    from movie_recommendation_etl_spark.operators.neardup import (
-        srp_bands,
-        srp_bands_vectorized,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
-    both = emb.select(
-        "vec_id",
-        srp_bands("emb", dim=64).alias("b_expr"),
-        srp_bands_vectorized("emb", dim=64).alias("b_np"),
-    )
-    assert both.filter(F.col("b_expr") != F.col("b_np")).count() == 0
-    # and the candidate generator accepts the scale path end-to-end
-    from movie_recommendation_etl_spark.operators.neardup import (
-        srp_candidate_pairs,
-    )
-
-    labeled = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.transform("embedding", lambda x: x.cast("double")).alias("emb"),
-    )
-    n_expr = srp_candidate_pairs(labeled, "vec_id", "label", "emb", dim=64).count()
-    n_np = srp_candidate_pairs(
-        labeled, "vec_id", "label", "emb", dim=64, impl="vectorized"
-    ).count()
-    assert n_expr == n_np
-
-
 def test_knn_bruteforce_shape(spark, sf_dir):
     rows = q60_knn_bruteforce(spark, sf_dir).collect()
     by_q: dict[int, list] = {}
