@@ -1432,7 +1432,7 @@ def main() -> int:
     vecs = vecs.cache()
     vecs.count()
     lsh = fit_lsh(vecs)
-    index = prepare_index(lsh, vecs)
+    index = prepare_index(lsh, vecs, "doc_id")
     doc_ids = [r[0] for r in vecs.select("doc_id").limit(4).collect()]
     warm: list[float] = []
     for qid in doc_ids:
@@ -1557,7 +1557,7 @@ def main() -> int:
         v = v.cache()
         v.count()
         lsh_fx = fit_lsh(v)
-        return v, lsh_fx, prepare_index(lsh_fx, v)
+        return v, lsh_fx, prepare_index(lsh_fx, v, "doc_id")
 
     def _ann_warm_resample() -> float:
         v, lsh_fx, idx = _ann_fixture()

@@ -143,14 +143,16 @@ def _cmd_recommend(args: argparse.Namespace) -> int:
         load_lsh_model,
     )
 
-    spark = get_spark(app_name="mre-recommend")
-    model = load_lsh_model(f"{args.out_dir}/lsh_model")
     if Path(f"{args.out_dir}/ann_index").exists():
         # Persisted index (see index-build): cold start skips the
-        # whole-corpus LSH re-transform, and the request runs in the
-        # driver without a Spark job.
-        index = load_ann_index(spark, f"{args.out_dir}/ann_index")
+        # whole-corpus LSH re-transform, and the request runs in this
+        # process with no JVM (the index stores the query's buckets, so
+        # the LSH model is not loaded either).
+        model = None
+        index = load_ann_index(None, f"{args.out_dir}/ann_index")
     else:
+        spark = get_spark(app_name="mre-recommend")
+        model = load_lsh_model(f"{args.out_dir}/lsh_model")
         vecs = spark.read.parquet(f"{args.out_dir}/vector")
         index = prepare_index(model, vecs)
     rows = recommend(

@@ -364,7 +364,7 @@ def _flagship_ann(spark: SparkSession, sf_dir: str):
     # reuse them without re-running tokenize/TF-IDF
     model, vecs = fit_document_vectors(docs)
     lsh = fit_lsh(vecs)
-    index = prepare_index(lsh, vecs)
+    index = prepare_index(lsh, vecs, "doc_id")
     return model, recommend(lsh, index, "doc_id", FLAGSHIP_QUERY_DOC, top_k=TOP_K)
 
 

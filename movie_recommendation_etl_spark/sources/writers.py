@@ -672,9 +672,10 @@ def save_model(model, path: str) -> None:
 
 
 def save_ann_index(index: DataFrame, path: str) -> None:
-    """Persist a prepare_index()'d ANN corpus (ids + feature vectors + LSH
-    `hashes`) as parquet, so a serving job cold-starts by reading the index
-    instead of re-running tokenize → TF-IDF → LSH transform over the whole
+    """Persist a prepare_index() frame as parquet. It holds exactly the
+    three columns load_ann_index reads (id, feature vectors, LSH
+    `hashes`), so a serving job cold-starts by reading the index instead
+    of re-running tokenize → TF-IDF → LSH transform over the whole
     corpus (~the full fit cost at the reference's 604k docs; the reference
     persists only the model, execute.py:283, and re-transforms on every
     restart). VectorUDT columns round-trip natively — Spark records the UDT
@@ -684,7 +685,9 @@ def save_ann_index(index: DataFrame, path: str) -> None:
     index.write.mode("overwrite").parquet(path)
 
 
-def append_ann_index(lsh_model, new_vectors: DataFrame, path: str) -> None:
+def append_ann_index(
+    lsh_model, new_vectors: DataFrame, path: str, id_col: str = "id"
+) -> None:
     """Incremental index maintenance: LSH-hash ONLY the new batch through
     the frozen model and append its files to the persisted index — the
     production ingest loop at scale (O(batch) work per admission; nothing
@@ -692,7 +695,10 @@ def append_ann_index(lsh_model, new_vectors: DataFrame, path: str) -> None:
     neighbors are byte-stable). Pair with
     ml.tfidf.transform_document_vectors to vectorize the raw new docs with
     the frozen vocabulary first. Parquet append only adds files; the next
-    load_ann_index sees the union."""
+    load_ann_index reads them all as one dataset, so the batch is written
+    as the same three columns prepare_index keeps (id, features,
+    hashes)."""
+    new_vectors = new_vectors.select(id_col, lsh_model.getInputCol())
     lsh_model.transform(new_vectors).write.mode("append").parquet(path)
 
 
@@ -701,7 +707,9 @@ def load_ann_index(
 ):
     """Load a save_ann_index() parquet (appended files included) into the
     driver as an ``ml.ann.LshIndex``: the id column, the features as CSR
-    arrays and as per-term postings, and the stored LSH bucket values. The
+    arrays and as per-term postings, and the stored LSH bucket values.
+    Only those three columns are read, which is all an index holds;
+    indexes saved with every column of the vector frame load the same. The
     files are read once with pyarrow; no Spark job runs and nothing is
     cached in the JVM (``spark`` is unused, kept for the loader
     signature). ml.ann.recommend then answers each request in this

@@ -123,7 +123,7 @@ def main() -> int:
         lsh = fit_lsh(vecs)
         # left unfilled: the query batch's broadcast hint, not the cache's
         # statistics, must pick the join's build side
-        index = prepare_index(lsh, vecs)
+        index = prepare_index(lsh, vecs, "doc_id")
         q_batch = vecs.filter("doc_id % 37 = 0")
         return _batch_topk(
             _batch_lsh_pass(

@@ -49,7 +49,7 @@ def test_recommend_uses_prepared_index(spark, sf_dir):
     index = None
     try:
         lsh = fit_lsh(vecs)
-        index = prepare_index(lsh, vecs)
+        index = prepare_index(lsh, vecs, "doc_id")
         # the prepared index is what MLlib checks for: hashes column present
         assert "hashes" in index.columns
         assert index.storageLevel.useMemory  # cached, not recomputed per query
@@ -244,7 +244,7 @@ def test_ann_index_roundtrip(spark, sf_dir, tmp_path):
     _, vecs = fit_document_vectors(docs)
     vecs = vecs.cache()
     model = fit_lsh(vecs)
-    index = prepare_index(model, vecs)
+    index = prepare_index(model, vecs, "doc_id")
     fresh = recommend(model, index, "doc_id", 42, top_k=5).collect()
 
     mpath, ipath = str(tmp_path / "lsh_model"), str(tmp_path / "ann_index")
@@ -286,10 +286,12 @@ def test_ann_index_incremental_append(spark, sf_dir, tmp_path):
     model, vecs_old = fit_document_vectors(old)
     vecs_old = vecs_old.cache()
     lsh = fit_lsh(vecs_old)
-    index = prepare_index(lsh, vecs_old)
+    index = prepare_index(lsh, vecs_old, "doc_id")
     ipath = str(tmp_path / "ann_index")
     save_ann_index(index, ipath)
-    append_ann_index(lsh, transform_document_vectors(model, new), ipath)
+    append_ann_index(
+        lsh, transform_document_vectors(model, new), ipath, "doc_id"
+    )
     loaded = load_ann_index(spark, ipath, id_col="doc_id")
     try:
         all_ids = sorted(r["doc_id"] for r in docs.select("doc_id").collect())
@@ -303,6 +305,58 @@ def test_ann_index_incremental_append(spark, sf_dir, tmp_path):
     finally:
         vecs_old.unpersist()
         index.unpersist()
+
+
+def test_ann_index_layout(spark, sf_dir, tmp_path):
+    """A saved index is exactly (id, features, hashes) in every parquet
+    file, after save_ann_index and after append_ann_index alike; an index
+    written with every column of the vector frame (the layout before the
+    projection) still loads to the same LshIndex arrays."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from movie_recommendation_etl_spark.ml.ann import prepare_index
+    from movie_recommendation_etl_spark.sources.writers import (
+        append_ann_index,
+        load_ann_index,
+        save_ann_index,
+    )
+
+    def layouts(path):
+        return {
+            tuple(pq.read_schema(f).names)
+            for f in Path(path).glob("*.parquet")
+        }
+
+    docs = load_table(spark, sf_dir, "documents")
+    _, vecs = fit_document_vectors(docs)
+    lsh = fit_lsh(vecs)
+    index = prepare_index(lsh, vecs, "doc_id")
+    cols = ("doc_id", "norm_features", "hashes")
+    narrow, wide = str(tmp_path / "narrow"), str(tmp_path / "wide")
+    try:
+        assert tuple(index.columns) == cols
+        save_ann_index(index, narrow)
+        assert layouts(narrow) == {cols}
+        save_ann_index(lsh.transform(vecs), wide)
+        assert all(len(names) > len(cols) for names in layouts(wide))
+        a = load_ann_index(spark, narrow, id_col="doc_id")
+        b = load_ann_index(spark, wide, id_col="doc_id")
+        for attr in ("ids", "indptr", "indices", "values", "p_ptr",
+                     "p_rows", "p_vals", "hashes", "sq_norms"):
+            assert np.array_equal(getattr(a, attr), getattr(b, attr)), attr
+
+        extra = vecs.filter(F.col("doc_id") < 10).withColumn(
+            "doc_id", F.col("doc_id") + 10_000
+        )
+        append_ann_index(lsh, extra, narrow, "doc_id")
+        assert layouts(narrow) == {cols}
+        grown = load_ann_index(spark, narrow, id_col="doc_id")
+        assert len(grown) == len(a) + 10
+    finally:
+        index.unpersist()
+        vecs.unpersist()
 
 
 def _spark_answers(model, index, id_col, query_ids, top_k):
@@ -353,7 +407,7 @@ def test_loaded_index_matches_spark_recommend(spark, sf_dir, tmp_path):
     _, vecs = fit_document_vectors(docs)
     vecs = vecs.cache()
     model = fit_lsh(vecs)
-    index = prepare_index(model, vecs)
+    index = prepare_index(model, vecs, "doc_id")
     ipath = str(tmp_path / "ann_index")
     save_ann_index(index, ipath)
     try:
@@ -426,7 +480,7 @@ def test_loaded_index_dense_string_ids(spark, sf_dir, tmp_path):
         "norm_vec",
     )
     model = fit_lsh(emb, "norm_vec")
-    index = prepare_index(model, emb)
+    index = prepare_index(model, emb, "key")
     ipath = str(tmp_path / "ann_index")
     save_ann_index(index, ipath)
     try:

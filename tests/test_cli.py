@@ -30,7 +30,9 @@ def movies_csv(spark, tmp_path_factory):
     return path
 
 
-def test_cli_transform_then_recommend(capsys, movies_csv, tmp_path):
+def test_cli_transform_then_recommend(
+    capsys, monkeypatch, movies_csv, tmp_path
+):
     out_dir = str(tmp_path / "staged")
     assert main(["transform", movies_csv, out_dir]) == 0
     assert "vectors ready" in capsys.readouterr().out
@@ -57,6 +59,15 @@ def test_cli_transform_then_recommend(capsys, movies_csv, tmp_path):
     assert main(["index-build", out_dir]) == 0
     assert "index written" in capsys.readouterr().out
     assert (tmp_path / "staged" / "ann_index").exists()
+    # with an index, recommend answers without a SparkSession or the LSH model
+    from movie_recommendation_etl_spark import session
+    from movie_recommendation_etl_spark.sources import writers
+
+    def no_jvm(*args, **kwargs):
+        raise AssertionError("recommend from an index started Spark")
+
+    monkeypatch.setattr(session, "get_spark", no_jvm)
+    monkeypatch.setattr(writers, "load_lsh_model", no_jvm)
     assert main(["recommend", out_dir, "100", "--top-k", "4"]) == 0
     lines2 = [
         ln
