@@ -1442,8 +1442,8 @@ def main() -> int:
     warm.sort()
     timings["ann_warm_query"] = round(warm[len(warm) // 2], 3)
 
-    # Many-query ANN as ONE similarity join (ml/ann.py:batch_ann — the
-    # 100 TB shape: the per-query approxNearestNeighbors loop above costs
+    # Many-query ANN as ONE Arrow map over the index (ml/ann.py:batch_ann —
+    # the 100 TB shape: the per-query approxNearestNeighbors loop above costs
     # a driver round-trip per query; batch mode answers ~3% of the corpus
     # in one distributed job). Recorded so the scale path has a number,
     # not just a recall test: compare batch_ann / n_queries against

@@ -5,9 +5,10 @@ The reference's only interactive query engine is ``get_recommendations``
 ``approxNearestNeighbors`` for k+1, drop self, limit k, collect ids. This
 module reproduces that shape with a *seeded* BucketedRandomProjectionLSH
 (the reference never seeds — its results are unstable across runs; SURVEY
-§5.4 pins determinism) plus a batch variant built on approxSimilarityJoin
-for many-query workloads (per-query driver loops don't scale; a single
-hash-join over bucketed candidates does).
+§5.4 pins determinism) plus a batch variant for many-query workloads
+(per-query driver loops don't scale): :func:`batch_ann` runs the same
+top-k kernel as the driver path (:meth:`LshIndex.topk`) in one Arrow map
+over the index's partitions and merges the partitions' answers per query.
 
 :func:`recommend` has two paths, chosen by the type of its index argument:
 
@@ -57,10 +58,16 @@ from pyspark.ml.feature import (
     BucketedRandomProjectionLSHModel,
     Normalizer,
 )
-from pyspark.ml.functions import array_to_vector, vector_to_array
+from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    DoubleType,
+    StructField,
+    StructType,
+)
 
 # Reference LSH hyperparameters: transform/execute.py:266-267.
 BUCKET_LENGTH = 1.95
@@ -178,6 +185,49 @@ class LshIndex:
         d[np.searchsorted(u, qi)] -= qv
         return float(np.cumsum(d * d)[-1])
 
+    def row(self, r: int) -> tuple[np.ndarray, np.ndarray]:
+        """Row r's (terms, values)."""
+        lo, hi = self.indptr[r], self.indptr[r + 1]
+        return self.indices[lo:hi], self.values[lo:hi]
+
+    def topk(
+        self, qi: np.ndarray, qv: np.ndarray, row_sets: list, top_k: int
+    ) -> list[list[tuple]]:
+        """The top-k kernel that serve and batch share: for each array of
+        rows in ``row_sets``, the (dist, row) top_k nearest to the query
+        vector with terms ``qi`` and values ``qv``, ordered by (dist, id).
+        Query terms this index stores no value for contribute nothing to
+        the screen, so the query may come from another index.
+
+        A set of more than top_k rows is screened with |x|^2 + |q|^2 -
+        2 x.q, which is off by a few ulp of its terms, keeping every row
+        within a wide slack of the k-th screened value; only those get the
+        exact distance. The dots accumulate over the query terms' postings
+        only, once per call whatever the number of sets."""
+        dots, qn = None, float(qv @ qv)
+        out = []
+        for rows in row_sets:
+            if len(rows) > top_k:
+                if dots is None:
+                    end = np.minimum(qi + 1, self.dim)
+                    starts = self.p_ptr[np.minimum(qi, self.dim)]
+                    lens = self.p_ptr[end] - starts
+                    # positions of the query terms' postings, term after term
+                    at = np.repeat(starts - np.cumsum(lens) + lens, lens)
+                    at += np.arange(len(at))
+                    dots = np.bincount(
+                        self.p_rows[at],
+                        weights=self.p_vals[at] * np.repeat(qv, lens),
+                        minlength=len(self.ids),
+                    )
+                approx = self.sq_norms[rows] + qn - 2.0 * dots[rows]
+                kth = np.partition(approx, top_k - 1)[top_k - 1]
+                rows = rows[approx <= kth + 1e-9 * (1.0 + qn + abs(kth))]
+            found = [(math.sqrt(self._sqdist(j, qi, qv)), j) for j in rows]
+            found.sort(key=lambda t: (t[0], self.ids[t[1]]))
+            out.append(found[:top_k])
+        return out
+
     def neighbors(self, query_id, top_k: int) -> list[tuple]:
         """(id, dist) of the top_k nearest single-probe candidates,
         ordered by (dist, id), every row with the query's id excluded;
@@ -188,34 +238,10 @@ class LshIndex:
         if not len(hit) or top_k <= 0:
             return []
         r = hit[0]
-        lo, hi = self.indptr[r], self.indptr[r + 1]
-        qi, qv = self.indices[lo:hi], self.values[lo:hi]
         # single probe: same bucket as the query in at least one table
         cand = (self.hashes == self.hashes[r]).any(axis=1)
         cand &= ~is_query
-        rows = np.flatnonzero(cand)
-        if len(rows) > top_k:
-            # Screen with |x|^2 + |q|^2 - 2 x.q, which is off by a few ulp
-            # of its terms, and keep every row within a wide slack of the
-            # k-th screened value; only those get the exact distance. The
-            # dots accumulate over the query terms' postings only.
-            starts = self.p_ptr[qi]
-            lens = self.p_ptr[qi + 1] - starts
-            # positions of the query terms' postings, term after term
-            at = np.repeat(starts - np.cumsum(lens) + lens, lens)
-            at += np.arange(len(at))
-            dots = np.bincount(
-                self.p_rows[at],
-                weights=self.p_vals[at] * np.repeat(qv, lens),
-                minlength=len(self.ids),
-            )
-            qn = float(qv @ qv)
-            approx = self.sq_norms[rows] + qn - 2.0 * dots[rows]
-            kth = np.partition(approx, top_k - 1)[top_k - 1]
-            rows = rows[approx <= kth + 1e-9 * (1.0 + qn + abs(kth))]
-        found = [(math.sqrt(self._sqdist(j, qi, qv)), j) for j in rows]
-        found.sort(key=lambda t: (t[0], self.ids[t[1]]))
-        found = found[:top_k]
+        (found,) = self.topk(*self.row(r), [np.flatnonzero(cand)], top_k)
         ids = self.ids[[j for _, j in found]].tolist()
         return [(i, d) for i, (d, _) in zip(ids, found)]
 
@@ -281,49 +307,6 @@ def recommend(
     )
 
 
-def _batch_lsh_pass(
-    model: BucketedRandomProjectionLSHModel,
-    qs: DataFrame,
-    dataset: DataFrame,
-    id_col: str,
-    query_id_col: str,
-    *,
-    radius: float,
-) -> DataFrame:
-    """One LSH similarity-join pass of :func:`batch_ann` as a LAZY frame
-    (query_id, neighbor_id, dist). Module-level so the plan-pin harness
-    (scripts/pin_plans.py: batch_ann_pass1) captures EXACTLY the join the
-    bench executes instead of a re-derived copy that could silently
-    diverge (r18 review).
-
-    The query batch is broadcast, so it must fit in a broadcast. Without
-    the hint the planner sizes an unfilled ``prepare_index`` cache from
-    its plan estimate and can broadcast the whole index instead."""
-    return model.approxSimilarityJoin(
-        F.broadcast(qs), dataset, radius, distCol="dist"
-    ).select(
-        F.col(f"datasetA.{query_id_col}").alias("query_id"),
-        F.col(f"datasetB.{id_col}").alias("neighbor_id"),
-        "dist",
-    )
-
-
-def _batch_topk(pairs: DataFrame, top_k: int) -> DataFrame:
-    """The per-query top-k window over a candidate-pair frame — lazy
-    (batch_ann adds the eager localCheckpoint; the pin harness does
-    not). Per-QUERY window: high-cardinality partitions, the
-    single-window form's correct case (see operators/topk.py and
-    ml/ivf.py's note)."""
-    w = W.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-    )
-
-
 def batch_ann(
     model: BucketedRandomProjectionLSHModel,
     queries: DataFrame,
@@ -332,90 +315,87 @@ def batch_ann(
     query_id_col: str,
     *,
     top_k: int = 5,
-    radius: float = 1.4,
 ) -> DataFrame:
-    """Many-query ANN as ONE distributed job: approxSimilarityJoin inside
-    ``radius`` (on L2-normalized vectors dist=sqrt(2-2cos), so radius 1.4 ≈
-    cos >= 0.02), then window top-k per query, where the reference's
-    per-query approxNearestNeighbors loop runs a full scan per query from
-    the driver. The corpus side scales with the cluster; the query side
-    is broadcast (see the last paragraph), so a many-query batch over a
-    large corpus has to be split into chunks that each fit in a
-    broadcast.
+    """Many-query ANN: :func:`recommend`'s answer for every row of
+    ``queries`` as one lazy frame (query_id, neighbor_id, dist, rnk), where
+    the reference runs a per-query approxNearestNeighbors loop from the
+    driver. Each query gets the top_k of the docs that share a bucket with
+    it (single probe), every row with its id excluded; when fewer than
+    top_k docs collide, the exact top_k over all the other rows.
 
-    A fixed radius under-returns for queries in sparse neighborhoods (the
-    r2 scale audit). Under-filled queries (< top_k neighbors) are re-run
-    through one join at twice the radius, and — since approxSimilarityJoin
-    can only ever see bucket-colliding pairs regardless of radius — any
-    STILL-under-filled residual finishes with an exact brute-force pass.
-    Each escalation touches only the residual queries, so the common case
-    stays one join and the guarantee costs (residual x dataset), not
-    (queries x dataset).
-
-    Each pass's top-k is materialized via localCheckpoint: it is O(queries
-    x top_k) rows, and the under-fill check would otherwise re-run the
-    similarity join once per escalation decision. Every pass broadcasts
-    its queries, so the query batch must fit in a broadcast.
-    """
-    def topk(pairs: DataFrame) -> DataFrame:
-        return _batch_topk(pairs, top_k).localCheckpoint(eager=True)
-
-    def lsh_pass(qs: DataFrame, r: float) -> DataFrame:
-        return _batch_lsh_pass(
-            model, qs, dataset, id_col, query_id_col, radius=r
-        )
-
-    def residual(result: DataFrame) -> DataFrame:
-        filled = (
-            result.groupBy("query_id")
-            .count()
-            .filter(F.col("count") >= top_k)
-            .select("query_id")
-        )
-        return queries.join(
-            filled,
-            queries[query_id_col] == filled["query_id"],
-            "left_anti",
-        )
-
-    def merge(result: DataFrame, redo: DataFrame) -> DataFrame:
-        # redo replaces the under-filled queries' rows wholesale (their
-        # earlier partial candidates are a subset of the wider pass's).
-        return result.join(
-            redo.select("query_id").distinct(), "query_id", "left_anti"
-        ).unionByName(redo)
-
-    result = topk(lsh_pass(queries, radius))
-    under = residual(result)
-    if under.isEmpty():
-        return result
-    result = merge(result, topk(lsh_pass(under, radius * 2)))
-    under = residual(result)
-    if under.isEmpty():
-        return result
+    Both sides are hashed with ``model`` when they have no ``hashes``
+    column. The query batch is collected once (one job) and shipped with
+    the task, so it must fit in a broadcast; a many-query batch over a
+    large corpus has to be split into chunks that do. The corpus side is
+    one Arrow map: each task loads its partition as an :class:`LshIndex`
+    and runs the kernel serve runs (:meth:`LshIndex.topk`), emitting per
+    query its partition's top_k among colliding rows and its exact top_k
+    over all rows from one screen. A per-query window then keeps the
+    colliding rows when at least top_k were emitted, else the exact ones,
+    and ranks them by (dist, neighbor_id): the partition-local top-k plus
+    global merge of REPOSE (ICDE 2021). Distances are MLlib's, bit for
+    bit."""
     feat = model.getInputCol()
-    qa = F.broadcast(
-        under.select(
-            F.col(query_id_col).alias("query_id"),
-            vector_to_array(feat).alias("__qa"),
+
+    def hashed(df: DataFrame, key: str) -> DataFrame:
+        if "hashes" in df.columns:
+            return df.select(key, feat, "hashes")
+        return model.transform(df.select(key, feat))
+
+    qtable = hashed(queries, query_id_col).toArrow()
+    qs, qids = LshIndex(qtable, query_id_col, feat), qtable[query_id_col]
+    schema = StructType([
+        StructField("query_id", queries.schema[query_id_col].dataType),
+        StructField("neighbor_id", dataset.schema[id_col].dataType),
+        StructField("dist", DoubleType()),
+        StructField("colliding", BooleanType()),
+    ])
+
+    def block_topk(batches):
+        import pyarrow as pa
+
+        batches = list(batches)
+        if not any(b.num_rows for b in batches):
+            return
+        block = pa.Table.from_batches(batches)
+        index = LshIndex(block, id_col, feat)
+        qpos, rows, dists, colliding = [], [], [], []
+        for q in range(len(qs)):
+            others = index.ids != qs.ids[q]
+            hit = (index.hashes == qs.hashes[q]).any(axis=1) & others
+            sets = [np.flatnonzero(hit), np.flatnonzero(others)]
+            for flag, found in zip(
+                (True, False), index.topk(*qs.row(q), sets, top_k)
+            ):
+                qpos += [q] * len(found)
+                rows += [j for _, j in found]
+                dists += [d for d, _ in found]
+                colliding += [flag] * len(found)
+        yield from pa.table({
+            "query_id": qids.take(pa.array(qpos, pa.int64())),
+            "neighbor_id": block.column(id_col).take(
+                pa.array(rows, pa.int64())
+            ),
+            "dist": pa.array(dists, pa.float64()),
+            "colliding": pa.array(colliding, pa.bool_()),
+        }).to_batches()
+
+    per_q = W.partitionBy("query_id")
+    return (
+        hashed(dataset, id_col)
+        .mapInArrow(block_topk, schema)
+        .withColumn("n_colliding", F.count_if("colliding").over(per_q))
+        .filter(F.col("colliding") == (F.col("n_colliding") >= top_k))
+        .select(
+            "query_id",
+            "neighbor_id",
+            "dist",
+            F.row_number()
+            .over(per_q.orderBy("dist", "neighbor_id"))
+            .alias("rnk"),
         )
+        .filter(F.col("rnk") <= top_k)
     )
-    da = dataset.select(
-        F.col(id_col).alias("neighbor_id"),
-        vector_to_array(feat).alias("__da"),
-    )
-    exact = qa.crossJoin(da).select(
-        "query_id",
-        "neighbor_id",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with("__qa", "__da", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ).alias("dist"),
-    )
-    return merge(result, topk(exact))
 
 
 def embeddings_as_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,11 +42,11 @@ TOP_K = 5
 
 
 def lsh_knn_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch LSH ANN over embeddings: one approxSimilarityJoin for all 20
-    queries (the scale path), window top-5 per query — the neighbor-level
-    frame that recall@5 is scored on. q61 wraps it in the
-    contract gate. Compare with q60_knn_bruteforce — the exact baseline
-    it approximates."""
+    """Batch LSH ANN over embeddings: batch_ann answers all 20 queries in
+    one Arrow map over the corpus (the scale path), merged to a top-5 per
+    query — the neighbor-level frame that recall@5 is scored on. q61 wraps
+    it in the contract gate. Compare with q60_knn_bruteforce — the exact
+    baseline it approximates."""
     emb = embeddings_as_vectors(spark, sf_dir)
     model = fit_lsh(emb, "norm_vec", bucket_length=0.5)
     queries = (
@@ -164,15 +164,15 @@ def q61_knn_lsh_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only; the q44 pattern): the LSH candidate sets are engine-specific
     (seeded random projections), but three things are cross-engine facts —
 
-    - every query fills exactly top_k (the widened pass + exact
-      residual fallback in batch_ann guarantee it structurally),
+    - every query fills exactly top_k (batch_ann falls back to the exact
+      top_k when fewer than top_k docs share a bucket with the query),
     - the exact top-1 cosine per query (computed here brute-force over the
       20-query slice, hash-exact vs the oracle — q60's arithmetic),
     - mean recall@5 vs the exact top-5 clears 0.8, the same floor the
       pytest gate pins (tests/test_ann_flagship.py) — integer-rational
       compare, corpus-level so a single hard query can't flake the gate.
 
-    A broken LSH (wrong buckets, lost widening, dropped queries) flips
+    A broken LSH (wrong buckets, lost fallback, dropped queries) flips
     n_returned or suite_recall_ok and hash-fails the driver gate instead
     of hiding behind a rows-only row count."""
     from movie_recommendation_etl_spark.plans.dedup_similarity import (

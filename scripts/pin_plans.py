@@ -21,13 +21,7 @@ frame's plan is just a Scan ExistingRDD — the candidate-join plan shape
 those queries run is pinned structurally in tests/test_plan_shapes.py
 (no Window / no cartesian / bounded exchange count on the lazy twin), and
 their wall-clock is guarded by bench.compute_drift. EXTRA_PINNED pins
-bench-only arms that do have full lazy plans (q48_batch; batch_ann_pass1 —
-r18, VERDICT r17 #5: batch_ann's bench line has been bimodal 1.9-4.2 s on
-identical code since r11, and its materialized result frame can't be
-pinned, so the LAZY first-pass approxSimilarityJoin + top-k window — the
-plan whose join strategy would explain a real mode flip — is pinned here;
-building its fixture pays one sf0.1 TF-IDF fit + LSH fit, plan stays
-unexecuted).
+bench-only arms that do have full lazy plans (q48_batch).
 """
 
 from __future__ import annotations
@@ -91,48 +85,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
 
-    def _batch_ann_pass1(spark, sf_dir):
-        # the bench's batch_ann fixture, stopped BEFORE the eager
-        # localCheckpoint: the lazy first LSH pass + per-query top-k
-        # window — the join whose strategy a mode flip would change.
-        # Built from batch_ann's OWN pass/topk helpers (ml/ann.py), not a
-        # re-derived copy, so the pin can never silently diverge from
-        # what the bench executes (r18 review).
-        import inspect
-
-        from movie_recommendation_etl_spark.ml.ann import (
-            _batch_lsh_pass,
-            _batch_topk,
-            batch_ann,
-            fit_lsh,
-            prepare_index,
-        )
-        from movie_recommendation_etl_spark.ml.tfidf import (
-            fit_document_vectors,
-        )
-        from movie_recommendation_etl_spark.sources.catalog import load_table
-
-        # Pass-1 radius comes from batch_ann's OWN signature default (r19,
-        # ADVICE r18: a hardcoded 1.4 here would silently diverge from the
-        # bench's executed plan if the default ever changes — the exact
-        # drift the shared helpers were extracted to prevent).
-        radius = inspect.signature(batch_ann).parameters["radius"].default
-
-        docs = load_table(spark, sf_dir, "documents")
-        _, vecs = fit_document_vectors(docs)
-        lsh = fit_lsh(vecs)
-        # left unfilled: the query batch's broadcast hint, not the cache's
-        # statistics, must pick the join's build side
-        index = prepare_index(lsh, vecs, "doc_id")
-        q_batch = vecs.filter("doc_id % 37 = 0")
-        return _batch_topk(
-            _batch_lsh_pass(
-                lsh, q_batch, index, "doc_id", "doc_id", radius=radius
-            ),
-            5,
-        )
-
-    extra = {"q48_batch": q48_batch_arm, "batch_ann_pass1": _batch_ann_pass1}
+    extra = {"q48_batch": q48_batch_arm}
 
     os.makedirs(OUT_DIR, exist_ok=True)
     drifted: list[str] = []

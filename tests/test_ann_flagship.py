@@ -578,10 +578,10 @@ def test_loaded_index_trailing_empty_vector(spark, tmp_path):
 
 
 def test_batch_ann_fills_underreturned_queries(spark, sf_dir):
-    """A radius far too small for any neighborhood must still yield exactly
-    top_k neighbors per query: the widening rounds find nothing new (LSH
-    only sees bucket collisions), so the exact brute-force fallback fills
-    the residual — and being exact, it must agree with q60's answer sets."""
+    """A bucket length so small that no two vectors share a bucket leaves
+    every query with fewer than top_k colliding neighbors, so the exact
+    top_k fills it — and being exact, it must agree with q60's answer
+    sets."""
     from movie_recommendation_etl_spark.ml.ann import (
         batch_ann,
         embeddings_as_vectors,
@@ -589,13 +589,13 @@ def test_batch_ann_fills_underreturned_queries(spark, sf_dir):
     )
 
     emb = embeddings_as_vectors(spark, sf_dir)
-    model = fit_lsh(emb, "norm_vec", bucket_length=0.5)
+    model = fit_lsh(emb, "norm_vec", bucket_length=1e-6)
     queries = emb.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "norm_vec"
     )
     dataset = emb.select("vec_id", "norm_vec")
     got = batch_ann(
-        model, queries, dataset, "vec_id", "query_id", top_k=5, radius=0.01
+        model, queries, dataset, "vec_id", "query_id", top_k=5
     ).collect()
     by_q: dict[int, set] = {}
     for r in got:
@@ -608,16 +608,21 @@ def test_batch_ann_fills_underreturned_queries(spark, sf_dir):
     assert by_q == exact
 
 
-def test_batch_ann_broadcasts_queries_on_unfilled_index(spark):
-    """batch_ann's LSH join broadcasts the query batch even when the index
-    is a prepare_index frame that no action has filled yet. Without the
-    hint the planner sizes the unfilled cache from its plan estimate and
-    broadcasts the whole index instead (BuildRight)."""
+def test_batch_ann_is_the_serve_kernel_in_one_arrow_map(spark, tmp_path):
+    """batch_ann answers every query exactly as LshIndex.neighbors does on
+    the saved index (ids, ranks, bit-identical distances). It runs as one
+    Arrow map over the index with no cartesian or nested-loop join, and
+    one call plus its collect() runs at most three jobs: the query
+    collect, the map stage and the per-query merge."""
     from pyspark.ml.linalg import SparseVector
 
     from movie_recommendation_etl_spark.ml.ann import (
-        _batch_lsh_pass,
+        batch_ann,
         prepare_index,
+    )
+    from movie_recommendation_etl_spark.sources.writers import (
+        load_ann_index,
+        save_ann_index,
     )
 
     rng = np.random.default_rng(0)
@@ -633,12 +638,30 @@ def test_batch_ann_broadcasts_queries_on_unfilled_index(spark):
     try:
         model = fit_lsh(vecs)
         index = prepare_index(model, vecs)
-        pairs = _batch_lsh_pass(
-            model, vecs.filter("id % 7 = 0"), index, "id", "id", radius=1.4
-        )
-        plan = pairs._jdf.queryExecution().executedPlan().toString()
-        joins = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
-        assert len(joins) == 1 and "BuildLeft" in joins[0], plan
+        ipath = str(tmp_path / "ann_index")
+        save_ann_index(index, ipath)
+        loaded = load_ann_index(spark, ipath)
+        sc = spark.sparkContext
+        sc.setJobGroup("batch-ann", "batch-ann")
+        try:
+            out = batch_ann(
+                model, vecs.filter("id % 7 = 0"), index, "id", "id", top_k=5
+            )
+            got = out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("batch-ann")) <= 3
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[0]  # the plan that ran
+        assert plan.count("MapInArrow") == 1, plan
+        assert "CartesianProduct" not in plan, plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        by_q: dict[int, list] = {}
+        for r in sorted(got, key=lambda r: (r["query_id"], r["rnk"])):
+            by_q.setdefault(r["query_id"], []).append(
+                (r["neighbor_id"], r["dist"])
+            )
+        assert by_q == {q: loaded.neighbors(q, 5) for q in range(0, 40, 7)}
     finally:
         vecs.unpersist()
         if index is not None:

@@ -71,18 +71,17 @@ def build(ids, vecs, hashes) -> LshIndex:
     return LshIndex(table, "id", "norm_features")
 
 
-def brute_force(index: LshIndex, ids, hashes, q, top_k) -> list[tuple]:
-    if q not in ids:
-        return []
-    r = ids.index(q)
-    lo, hi = index.indptr[r], index.indptr[r + 1]
-    qi, qv = index.indices[lo:hi], index.values[lo:hi]
-    found = [
-        (math.sqrt(index._sqdist(j, qi, qv)), ids[j])
-        for j in range(len(ids))
-        if ids[j] != q
-        and any(a == b for a, b in zip(hashes[j], hashes[r]))
+def candidates(ids, hashes, qh, exclude) -> list[int]:
+    """Rows that share a bucket with qh in at least one table, every row
+    with id ``exclude`` left out."""
+    return [
+        j for j in range(len(ids))
+        if ids[j] != exclude and any(a == b for a, b in zip(hashes[j], qh))
     ]
+
+
+def brute_force(index: LshIndex, ids, rows, qi, qv, top_k) -> list[tuple]:
+    found = [(math.sqrt(index._sqdist(j, qi, qv)), ids[j]) for j in rows]
     found.sort()
     return [(i, d) for d, i in found[:top_k]]
 
@@ -127,14 +126,42 @@ def test_postings_screen_matches_brute_force():
     assert index.dim == DIM and len(index) == len(ids)
     assert_postings_by_term_in_row_order(index)
 
+    def check(got, want, case):
+        assert [i for i, _ in got] == [i for i, _ in want], case
+        # bit-identical, not merely close
+        assert [d for _, d in got] == [d for _, d in want], case
+
     absent = 999
     for q in [*dict.fromkeys(ids), absent]:
         for k in (1, 2, 5, len(ids)):
-            got = index.neighbors(q, k)
-            want = brute_force(index, ids, hashes, q, k)
-            assert [i for i, _ in got] == [i for i, _ in want], (q, k)
-            # bit-identical, not merely close
-            assert [d for _, d in got] == [d for _, d in want], (q, k)
+            want = []
+            if q in ids:
+                r = ids.index(q)
+                rows = candidates(ids, hashes, hashes[r], q)
+                want = brute_force(index, ids, rows, *index.row(r), k)
+            check(index.neighbors(q, k), want, (q, k))
+
+    # queries the index does not hold, as a batch block sees them: the
+    # kernel ranks the colliding rows and all rows from one screen, and a
+    # term past every stored one (10 and 11 are the largest) adds nothing
+    outside = [
+        (sparse({0: 0.3, 4: 0.9, 11: 0.2}), 3),
+        ({**sparse({2: 0.5, 9: 0.1, DIM + 3: 0.7}), "size": DIM + 4}, absent),
+        (dense(rng.uniform(0.0, 1.0, DIM)), 7),
+    ]
+    qtable = build([-1] * len(outside), [v for v, _ in outside],
+                   rng.integers(-1, 1, size=(len(outside), TABLES)).tolist())
+    for q, (_, exclude) in enumerate(outside):
+        qi, qv = qtable.row(q)
+        qh = qtable.hashes[q].tolist()
+        sets = [candidates(ids, hashes, qh, exclude),
+                [j for j in range(len(ids)) if ids[j] != exclude]]
+        for k in (1, 2, 5, len(ids)):
+            got = index.topk(qi, qv, [np.array(s) for s in sets], k)
+            for rows, found in zip(sets, got):
+                check([(ids[j], d) for d, j in found],
+                      brute_force(index, ids, rows, qi, qv, k), (q, k))
+    assert qtable.indices.max() >= index.dim
     # the repeated id answers from its first row and excludes both rows
     assert all(i != 7 for i, _ in index.neighbors(7, len(ids)))
     # top_k past the candidate count returns every candidate

@@ -245,13 +245,22 @@ def test_map_in_pandas_confined_to_mg_candidates(oracle_plans):
     """MapInPandas (the per-partition imperative hop) is sanctioned in
     EXACTLY one oracled plan: q48's Misra-Gries candidate stage, whose
     entire point is bounded-state summarization that Catalyst cannot
-    express. Any other query growing a MapInPandas node means a
-    declarative plan silently degraded to Python."""
+    express. Its Arrow twin, MapInArrow, is likewise sanctioned only in
+    q61: batch_ann runs the LSH top-k kernel the driver path serves with
+    (numpy over each partition's vectors and postings) once per index
+    partition, so batch and serve share one screen and one exact rerank
+    (q61's contract reads that frame twice; the exchange above the map is
+    reused when it runs, so the map runs once). Any other query growing
+    either node means a declarative plan silently degraded to Python."""
     for name, plan in oracle_plans.items():
         if name == "q48_heavy_hitters":
             assert "MapInPandas" in plan, name
         else:
             assert "MapInPandas" not in plan, name
+        if name == "q61_knn_lsh_embeddings":
+            assert "MapInArrow" in plan, name
+        else:
+            assert "MapInArrow" not in plan, name
 
 
 def test_heavy_hitters_confirm_is_broadcast(spark, sf_dir):
